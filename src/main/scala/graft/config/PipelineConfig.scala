@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import scala.jdk.CollectionConverters._
 import graft.ops._
-import graft.sink.{FanOutWriter, StageMetrics, TableIO}
+import graft.pipeline.TranscriptPipeline
+import graft.sink.StageMetrics
 
 /** Config-driven pipeline builder — the Spark analog of the reference's
   * pipeline-config surface (`Pipeline::Init`,
@@ -35,7 +36,10 @@ import graft.sink.{FanOutWriter, StageMetrics, TableIO}
   * Each processor entry resolves through [[registry]] to a
   * `DataFrame => DataFrame` stage built from the operator library — the
   * whole configured pipeline stays ONE declarative Catalyst plan
-  * (config parsing happens at plan-build time, never per row).
+  * (config parsing happens at plan-build time, never per row). A parsed
+  * [[Spec]] with a `sink:` section runs end to end through
+  * [[graft.run.PipelineRunner.run]], the same runner as the built-in
+  * [[graft.pipeline.TranscriptPipeline.spec]].
   */
 object PipelineConfig {
 
@@ -66,6 +70,8 @@ object PipelineConfig {
 
   /** Processor-type registry (SURVEY.md §2.12): name → stage factory. */
   val registry: Map[String, JsonNode => Stage] = Map(
+    // the north-star multi-format parse (nginx/json/kv/csv/raw, `fmt`)
+    "parse_transcript" -> { _ => TranscriptPipeline.parse _ },
     "parse_regex" -> { n =>
       ParseOps.RegexParser(str(n, "sourceKey"), str(n, "regex"),
         strs(n, "keys"),
@@ -567,54 +573,20 @@ object PipelineConfig {
     /** The processor line instrumented with the reference's per-plugin
       * self-monitor counters (in/out/discarded, parse success/fail) —
       * [[StageMetrics]]. Run one action on the returned frame, then
-      * read `.counters`. Routing is NOT applied here; compose with
-      * `route` via [[runObserved]] for the end-to-end shape. */
+      * read `.counters`. Routing is NOT applied here. */
     def applyObserved(df: DataFrame): StageMetrics.Observed =
       StageMetrics.instrument(df, infos.zip(processors))
 
-    /** [[run]] with self-monitor counters: the processor line is
-      * observed and materialized once (eager localCheckpoint fires the
-      * observe aggregates — also the write below then reuses the
-      * materialized rows instead of recomputing the line per sink),
-      * then routed and written exactly as [[run]]. */
-    def runObserved(df: DataFrame, io: TableIO, runId: String)
-        : (Int, Seq[StageMetrics.StageCounters]) = {
-      val observed = applyObserved(df)
-      val mat = observed.df.localCheckpoint()
-      val counters = observed.counters
-      (writeRouted(route(mat), df, io, runId), counters)
-    }
-
-    /** End-to-end: configured pipeline → resumable fan-out write →
-      * per-sink aggregates — the YAML twin of
-      * [[graft.run.PipelineRunner.run]]. Returns buckets written. */
-    def run(df: DataFrame, io: TableIO, runId: String): Int =
-      writeRouted(apply(df), df, io, runId)
-
-    private def writeRouted(routed: DataFrame, df: DataFrame, io: TableIO,
-        runId: String): Int = {
-      val sk = sink.getOrElse(throw new IllegalArgumentException(
-        "config has no 'sink' section"))
-      // a dynamic topic template means the sink set is data-dependent:
-      // leave it undeclared so the writer's distinct() fallback
-      // discovers it (the reference likewise cannot enumerate dynamic
-      // kafka topics ahead of the data)
-      val sinkNames =
-        if (topic.nonEmpty) Nil
-        else (router.map(r =>
-            (r.rules.map(_.sink) :+ r.defaultSink).distinct).getOrElse(Nil)
-          ++ multicast.map(_.conditions.map(_._1)).getOrElse(Nil)).distinct
-      val writer = FanOutWriter(io, table = sk.table,
-        numBuckets = sk.numBuckets, bucketKeys = sk.bucketKeys,
-        sinks = sinkNames)
-      val written = writer.write(routed, runId)
-      sk.aggBucket.foreach { b =>
-        val back = io.read(df.sparkSession, sk.table)
-        io.overwrite(AggOps.sinkAggregates(back, bucket = b),
-          "sink_aggregates")
-      }
-      written
-    }
+    /** The complete routed-sink set, declared statically by the router
+      * rules and multicast conditions, so the fan-out writer enumerates
+      * its (sink, bucket) partitions with no data scan. Empty under a
+      * dynamic topic template: that sink set is data-dependent, and the
+      * writer's distinct() fallback discovers it (the reference likewise
+      * cannot enumerate dynamic kafka topics ahead of the data). */
+    def declaredSinks: Seq[String] =
+      if (topic.nonEmpty) Nil
+      else (router.toSeq.flatMap(r => r.rules.map(_.sink) :+ r.defaultSink)
+        ++ multicast.toSeq.flatMap(_.conditions.map(_._1))).distinct
   }
 
   def parse(text: String): Spec = {

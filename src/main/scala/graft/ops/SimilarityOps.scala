@@ -427,9 +427,11 @@ object SimilarityOps {
           sqrt(aggregate(col("__v__"), lit(0.0), (acc, x) => acc + x * x)))
       val dot = aggregate(zip_with(col("__v__"), col("__cvec__"),
         (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+      // a zero-norm vector or centroid has no cosine: try_divide makes
+      // it null, which ranks below every cell in the argmax
       val scored = prepped.crossJoin(broadcast(centroidDf(spark, cents)))
         .withColumn("__cos__",
-          round(dot / (col("__nv__") * col("__cnorm__")), 4))
+          round(try_divide(dot, col("__nv__") * col("__cnorm__")), 4))
       val carried = struct(df.columns.map(col): _*)
       scored
         .groupBy(col("__rid__"))
@@ -443,7 +445,9 @@ object SimilarityOps {
       * control-plane math — the reference's shard lookup analog). Same
       * sequential left-to-right double fold as the Catalyst `aggregate`,
       * same ROUNDED-cosine (4 dp HALF_UP, like SQL `round`) + cell-desc
-      * tie-break as [[assign]] and the oracle rankings. */
+      * tie-break as [[assign]] and the oracle rankings. Ranks exactly as
+      * [[assign]]'s argmax: a zero norm (null there) below every cell,
+      * and Spark's double order above it — NaN highest, then +inf. */
     private[ops] def probeCells(qv: Array[Double],
         cents: Array[Array[Double]]): Seq[Int] = {
       val nq = math.sqrt(qv.map(x => x * x).sum)
@@ -451,10 +455,12 @@ object SimilarityOps {
         var dot = 0.0
         var d = 0
         while (d < math.min(c.length, qv.length)) { dot += qv(d) * c(d); d += 1 }
-        val cos = dot / (nq * math.sqrt(c.map(x => x * x).sum))
-        (BigDecimal(cos).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble, i)
-      }.sortBy { case (cos, i) => (-cos, -i) }.take(nprobe).map(_._2).toSeq
+        val den = nq * math.sqrt(c.map(x => x * x).sum)
+        // SQL `round` leaves NaN and infinities as they are
+        (Option.when(den != 0.0)(dot / den).map(x => if (!x.isFinite) x
+          else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble), i)
+      }.sorted(Ordering.Tuple2(Ordering.Option(Ordering.Double.TotalOrdering),
+        Ordering.Int).reverse).take(nprobe).map(_._2).toSeq
     }
 
     /** Optional Lloyd (k-means) refinement of the sampled seed: each

@@ -74,12 +74,14 @@ object WireFormats {
       // labels/ts/fields all read the packed-groups COLUMN (a bound
       // attribute), never the packing expression itself — referencing
       // the tree again would re-run the whole regex per use
+      // the label scanner drops a trailing '|' (readSortedLabels), so a
+      // last value ending in '|' gets one more: `k#$#v||` reads back v|
       def labelsOf(tagSection: Column) = Cols.let(tagSection) { t =>
-        array_join(array_sort(zip_with(
+        Cols.let(array_join(array_sort(zip_with(
           regexp_extract_all(t, lit(tagRe), lit(1)),
           regexp_extract_all(t, lit(tagRe), lit(2)),
           (k, v) => concat(unescapeIdent(k), lit(LabelSep), unescapeIdent(v)))),
-          "|")
+          "|"))(j => when(j.endsWith("|"), concat(j, lit("|"))).otherwise(j))
       }
       val parsed = df
         .filter(ok)

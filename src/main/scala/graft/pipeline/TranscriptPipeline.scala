@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.config.PipelineConfig
 import graft.ops._
 
 /** The north-star composed pipeline: collect → parse → enrich → route →
@@ -12,6 +13,10 @@ import graft.ops._
   * hash aggregations with map-side partials — no RDDs, no UDFs, no
   * driver-side loops, so the identical plan runs on a 1000-executor
   * cluster against 10^12 turns.
+  *
+  * The pipeline is defined once, as [[spec]], which
+  * [[graft.run.PipelineRunner.run]] runs; `examples/transcript_pipeline.yaml`
+  * is the same spec as a config file.
   */
 object TranscriptPipeline {
 
@@ -87,12 +92,14 @@ object TranscriptPipeline {
     "python" -> "exec", "sql" -> "exec", "editor" -> "authoring",
     "none" -> "n/a")
 
-  def enrich(df: DataFrame): DataFrame = {
-    val d1 = EnrichOps.DictMap(roleDict, "role", "role_class",
-      handleMissing = true, missing = "other")(df)
+  private val enrichStages = Seq(
+    EnrichOps.DictMap(roleDict, "role", "role_class",
+      handleMissing = true, missing = "other"),
     EnrichOps.DictMap(toolDict, "tool", "tool_family",
-      handleMissing = true, missing = "misc")(d1)
-  }
+      handleMissing = true, missing = "misc"))
+
+  def enrich(df: DataFrame): DataFrame =
+    enrichStages.foldLeft(df)((d, m) => m(d))
 
   /** First-match-wins router on role (FIXTURES.md §4): the overlapping
     * third rule can never win over `^tool$` — proves rule order. */
@@ -110,7 +117,15 @@ object TranscriptPipeline {
   def aggregates(df: DataFrame): DataFrame =
     AggOps.sinkAggregates(df, bucket = "hour")
 
+  /** The whole job: the processor line (parse, then the two dict maps),
+    * the router, and the sink the runner writes — 32 `conv_id` buckets
+    * per sink, aggregates per hour. */
+  val spec: PipelineConfig.Spec = PipelineConfig.Spec(
+    processors = (parse _) +: enrichStages.map(m => m.apply _),
+    router = Some(router),
+    sink = Some(PipelineConfig.SinkSpec("events_routed", numBuckets = 32,
+      bucketKeys = Seq("conv_id"), aggBucket = Some("hour"))))
+
   /** The full plan. */
-  def apply(df: DataFrame): DataFrame =
-    route(enrich(parse(df)))
+  def apply(df: DataFrame): DataFrame = spec(df)
 }

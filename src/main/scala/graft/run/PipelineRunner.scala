@@ -1,14 +1,16 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import graft.config.PipelineConfig
 import graft.ops.AggOps
 import graft.pipeline.TranscriptPipeline
 import graft.sink.{FanOutWriter, Metrics, TableIO}
 
-/** Batch job entry: transcripts → parse → enrich → route → resumable
-  * fan-out write → per-sink aggregates (the full north-star pipeline as
-  * one run).
+/** Batch job entry: any pipeline spec — by default the north-star
+  * transcripts → parse → enrich → route — then resumable fan-out write
+  * → per-sink aggregates → self-metrics, as one run. The spec's `sink`
+  * section names the table, its bucket keys and count, and the
+  * aggregate time bucket.
   *
   * Resume contract: `run(runId)` may be invoked any number of times
   * after any partial failure; completed (sink, bucket) partitions are
@@ -23,24 +25,23 @@ object PipelineRunner {
     complete: Boolean)
 
   def run(input: DataFrame, io: TableIO, runId: String,
-      numBuckets: Int = 32, maxBuckets: Int = Int.MaxValue,
-      aggBucket: String = "hour"): RunResult = {
-    val spark = input.sparkSession
-    val routed = TranscriptPipeline(input)
-    // sink set declared statically from the router rules: the fan-out
-    // writer enumerates candidate partitions with NO extra data scan
-    val sinkNames = (TranscriptPipeline.router.rules.map(_.sink) :+
-      TranscriptPipeline.router.defaultSink).distinct
-    val writer = FanOutWriter(io, numBuckets = numBuckets, sinks = sinkNames)
+      maxBuckets: Int = Int.MaxValue,
+      spec: PipelineConfig.Spec = TranscriptPipeline.spec): RunResult = {
+    val sink = spec.sink.getOrElse(throw new IllegalArgumentException(
+      "pipeline spec has no 'sink' section"))
+    val writer = FanOutWriter(io, table = sink.table,
+      numBuckets = sink.numBuckets, bucketKeys = sink.bucketKeys,
+      sinks = spec.declaredSinks)
 
-    val written = writer.write(routed, runId, maxBuckets)
+    val written = writer.write(spec(input), runId, maxBuckets)
 
     if (maxBuckets == Int.MaxValue) {
       // aggregates + self-metrics from the durably written table
-      val back = io.read(spark, writer.table)
-      val aggs = AggOps.sinkAggregates(back, bucket = aggBucket)
-      io.overwrite(aggs, "sink_aggregates")
-      if (written > 0) Metrics.record(io, runId, back)
+      val back = io.read(input.sparkSession, sink.table)
+      sink.aggBucket.foreach(b =>
+        io.overwrite(AggOps.sinkAggregates(back, bucket = b),
+          "sink_aggregates"))
+      if (written > 0) Metrics.record(io, runId, back, sink.bucketKeys)
       RunResult(runId, written, complete = true)
     } else RunResult(runId, written, complete = false)
   }

@@ -1,6 +1,9 @@
 package graft.run
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import graft.config.PipelineConfig
+import graft.pipeline.TranscriptPipeline
 import graft.sink.TableIO
 import graft.sources.Transcripts
 
@@ -8,8 +11,13 @@ import graft.sources.Transcripts
   *
   * {{{
   * spark-submit --class graft.run.RunPipeline <jar> \
-  *   <inputParquetDir|synthetic:N> <sinkRoot> <runId> [numBuckets]
+  *   <inputParquetDir|synthetic:N> <sinkRoot> <runId> [pipelineConfig]
   * }}}
+  *
+  * `pipelineConfig` is the local path of a YAML/JSON [[PipelineConfig]]
+  * file with a `sink:` section; without it the job runs
+  * [[TranscriptPipeline.spec]] (`examples/transcript_pipeline.yaml` is
+  * the same pipeline as a file).
   *
   * The same invocation works on a real cluster (`--master yarn/k8s`,
   * any executor count) and on local[N] — the job carries no
@@ -22,9 +30,11 @@ import graft.sources.Transcripts
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
-      "usage: RunPipeline <inputDir|synthetic:N> <sinkRoot> <runId> [numBuckets]")
+      "usage: RunPipeline <inputDir|synthetic:N> <sinkRoot> <runId> [pipelineConfig]")
     val Array(input, sinkRoot, runId) = args.take(3)
-    val numBuckets = args.lift(3).map(_.toInt).getOrElse(32)
+    val spec = args.lift(3)
+      .map(p => PipelineConfig.parse(Files.readString(Paths.get(p))))
+      .getOrElse(TranscriptPipeline.spec)
 
     val builder = SparkSession.builder()
       .appName(s"graft-pipeline-$runId")
@@ -45,8 +55,7 @@ object RunPipeline {
         Transcripts.generate(spark, input.stripPrefix("synthetic:").toLong)
       else spark.read.parquet(input)
 
-    val result = PipelineRunner.run(df, TableIO(sinkRoot), runId,
-      numBuckets = numBuckets)
+    val result = PipelineRunner.run(df, TableIO(sinkRoot), runId, spec = spec)
     println(s"""{"runId":"${result.runId}","bucketsWritten":${result.bucketsWritten},"complete":${result.complete}}""")
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.GroupOps
 
@@ -150,7 +150,4 @@ final case class FanOutWriter(
     Lineage.record(io, runId, lineageSource, expected = allBuckets)
     allBuckets.length
   }
-
-  /** Read back the routed table (partition columns restored). */
-  def read(spark: SparkSession): DataFrame = io.read(spark, table)
 }

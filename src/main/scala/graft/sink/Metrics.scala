@@ -17,23 +17,26 @@ object Metrics {
   val table = "_metrics"
 
   /** Aggregate + append metrics for a routed DataFrame (must carry the
-    * `__sink__` and `fmt` columns of the standard pipeline). */
-  def record(io: TableIO, runId: String, routed: DataFrame): Unit = {
-    val rows = routed.groupBy(col("__sink__").as("sink"), col("fmt"))
+    * `__sink__` column; `fmt` is null when the processor line has no
+    * multi-format parse). `n_convs` counts distinct `keys` tuples — the
+    * sink's bucket keys, `conv_id` for the transcript pipeline. */
+  def record(io: TableIO, runId: String, routed: DataFrame,
+      keys: Seq[String]): Unit = {
+    val fmt =
+      if (routed.columns.contains("fmt")) col("fmt")
+      else lit(null).cast("string")
+    val rows = routed.groupBy(col("__sink__").as("sink"), fmt.as("fmt"))
       .agg(
         count(lit(1)).as("n_events"),
-        count_distinct(col("conv_id")).as("n_convs"))
+        count_distinct(col(keys.head), keys.tail.map(col): _*).as("n_convs"))
       .withColumn("run_id", lit(runId))
       .select("run_id", "sink", "fmt", "n_events", "n_convs")
     io.append(rows, table)
   }
 
-  def read(spark: SparkSession, io: TableIO): DataFrame =
-    io.read(spark, table)
-
   /** Parse-failure count for a run (fmt = raw rows kept by the
     * keep-source-on-fail contract). */
   def parseFailures(spark: SparkSession, io: TableIO, runId: String): Long =
-    read(spark, io).where(col("run_id") === runId && col("fmt") === "raw")
+    io.read(spark, table).where(col("run_id") === runId && col("fmt") === "raw")
       .agg(coalesce(sum("n_events"), lit(0L))).collect().head.getLong(0)
 }

@@ -24,21 +24,17 @@ import graft.sink.{FanOutWriter, TableIO}
   */
 object StreamingRunner {
 
-  /** parse→enrich→route on a streaming DataFrame — identical plan to
+  /** Fan-out sink via foreachBatch + the resumable writer, over the
+    * transcript pipeline — parse→enrich→route is the identical plan to
     * batch (the operators are all stateless projections/joins). */
-  def routed(stream: DataFrame): DataFrame =
-    TranscriptPipeline(stream)
-
-  /** Fan-out sink via foreachBatch + the resumable writer. */
   def fanOutWriter(stream: DataFrame, io: TableIO, runPrefix: String,
       numBuckets: Int = 32,
       trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
       checkpoint: Option[String] = None): DataStreamWriter[Row] = {
     val writer = FanOutWriter(io, numBuckets = numBuckets,
       extraPartCols = Seq("__batch__"),
-      sinks = (TranscriptPipeline.router.rules.map(_.sink) :+
-        TranscriptPipeline.router.defaultSink).distinct)
-    val w = routed(stream).writeStream
+      sinks = TranscriptPipeline.spec.declaredSinks)
+    val w = TranscriptPipeline(stream).writeStream
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -56,7 +52,7 @@ object StreamingRunner {
     * declarative.) */
   def windowedAggregates(stream: DataFrame, watermark: String = "1 hour",
       bucket: String = "5 minutes"): DataFrame =
-    routed(stream)
+    TranscriptPipeline(stream)
       .withWatermark("ts", watermark)
       .groupBy(col("__sink__"), window(col("ts"), bucket), col("tool"))
       .agg(count(lit(1)).as("n_events"))

@@ -3,6 +3,7 @@ package graft.config
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.run.PipelineRunner
 import graft.sources.Transcripts
 
 /** Config-driven pipeline: YAML/JSON spec → composed Catalyst plan. */
@@ -63,6 +64,7 @@ class PipelineConfigSpec extends AnyFunSuite {
 
   test("every registry type builds and runs from a minimal config") {
     val minimal: Map[String, String] = Map(
+      "parse_transcript" -> """{"type":"parse_transcript"}""",
       "parse_regex" -> """{"type":"parse_regex","sourceKey":"text","regex":"(\\S+) (\\d+)","keys":["k1","k2"]}""",
       "parse_json" -> """{"type":"parse_json","sourceKey":"text","keys":["level"]}""",
       "parse_delimiter" -> """{"type":"parse_delimiter","sourceKey":"text","separator":",","keys":["a","b"]}""",
@@ -249,7 +251,8 @@ class PipelineConfigSpec extends AnyFunSuite {
         |  bucketKeys: [conv_id]
         |  aggBucket: hour
         |""".stripMargin
-    val written = PipelineConfig.parse(yaml).run(input, TableIO(dir), "cfg-run")
+    val written = PipelineRunner.run(input, TableIO(dir), "cfg-run",
+      spec = PipelineConfig.parse(yaml)).bucketsWritten
     assert(written > 0)
     // aggregate-count equality vs the hardwired pipeline (north rule)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
@@ -390,7 +393,8 @@ class PipelineConfigSpec extends AnyFunSuite {
         |  bucketKeys: [conv_id]
         |  topic: "t_%{content.role}"
         |""".stripMargin
-    val written = PipelineConfig.parse(yaml).run(input, TableIO(dir), "topic-run")
+    val written = PipelineRunner.run(input, TableIO(dir), "topic-run",
+      spec = PipelineConfig.parse(yaml)).bucketsWritten
     assert(written > 0)
     val back = spark.read.parquet(s"$dir/events_routed")
     // routed-row equality: every row landed exactly once, under its topic

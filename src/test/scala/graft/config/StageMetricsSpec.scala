@@ -2,7 +2,6 @@ package graft.config
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession._
-import graft.sources.Transcripts
 
 /** Per-plugin self-monitor counters over the configured pipeline —
   * the counter set every reference processor unittest asserts
@@ -67,48 +66,5 @@ class StageMetricsSpec extends AnyFunSuite {
     assert(cs.head.counters("in_events_total") == 10L)
     assert(cs.head.counters("out_events_total") == 18L)
     assert(cs.head.counters("discarded_events_total") == 0L)
-  }
-
-  test("runObserved: counters ride the end-to-end configured write") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-obs").toString
-    val input = Transcripts.generate(spark, 60, seed = 11)
-    val yaml =
-      """processors:
-        |  - type: parse_regex
-        |    sourceKey: text
-        |    regex: '(?s).*latency_ms=(\d+).*'
-        |    keys: [lat]
-        |  - type: dict_map
-        |    sourceKey: role
-        |    destKey: role_class
-        |    dict: {user: human, assistant: model}
-        |    missing: other
-        |router:
-        |  sourceKey: role
-        |  rules:
-        |    - {regex: assistant, sink: sink_llm}
-        |  default: sink_user
-        |sink:
-        |  table: events_routed
-        |  numBuckets: 4
-        |  bucketKeys: [conv_id]
-        |""".stripMargin
-    val spec = PipelineConfig.parse(yaml)
-    val (written, counters) =
-      spec.runObserved(input, graft.sink.TableIO(dir), "obs-run")
-    assert(written > 0)
-    val n = input.count()
-    assert(counters.map(_.kind) == Seq("parse_regex", "dict_map"))
-    assert(counters(0).counters("in_events_total") == n &&
-      counters(0).counters("out_events_total") == n)
-    // parse successes + failures partition the kept rows
-    assert(counters(0).counters("out_successful_events_total") +
-      counters(0).counters("out_failed_events_total") == n)
-    assert(counters(0).counters("out_successful_events_total") > 0)
-    assert(counters(1).counters ==
-      Map("in_events_total" -> n, "out_events_total" -> n,
-        "discarded_events_total" -> 0L))
-    // and the write itself matches the unobserved pipeline
-    assert(spark.read.parquet(s"$dir/events_routed").count() == n)
   }
 }

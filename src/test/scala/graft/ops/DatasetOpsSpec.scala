@@ -134,9 +134,11 @@ class DatasetOpsSpec extends AnyFunSuite {
 
   test("ivf at scale shape: nlist=1024 assigns via broadcast centroid DATA, O(1) plan") {
     val dims = 8
+    // vec 1199 is all zeros: no cosine against any centroid
     val vecs = spark.range(0, 1200).toDF("vec_id")
       .withColumn("embedding", transform(sequence(lit(0), lit(dims - 1)),
-        d => sin(col("vec_id") * 0.7 + d).cast("float")))
+        d => when(col("vec_id") === 1199, lit(0f))
+          .otherwise(sin(col("vec_id") * 0.7 + d).cast("float"))))
       .cache()
     val ivf = SimilarityOps.IvfIndex(nlist = 1024, nprobe = 8)
     val cents = ivf.centroids(vecs)
@@ -149,14 +151,17 @@ class DatasetOpsSpec extends AnyFunSuite {
     val logical = assigned.queryExecution.optimizedPlan.toString
     assert(logical.length < 50000, s"plan grew with nlist: ${logical.length}")
     // assignment agrees with driver-side math on sampled vectors
-    val got = assigned.where(col("vec_id").isin(3L, 777L, 1111L))
+    // (and on the zero vector)
+    val got = assigned.where(col("vec_id").isin(3L, 777L, 1111L, 1199L))
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val qvs = vecs.where(col("vec_id").isin(3L, 777L, 1111L))
+    val qvs = vecs.where(col("vec_id").isin(3L, 777L, 1111L, 1199L))
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     for ((id, qv) <- qvs)
       assert(got(id) == ivf.probeCells(qv, cents).head, s"vec $id")
+    // every cosine of the zero vector is undefined: the cell-id tie-break
+    assert(got(1199L) == cents.length - 1)
     vecs.unpersist()
   }
 

@@ -18,6 +18,12 @@ class FanOutResumeSpec extends AnyFunSuite {
 
   private def input = Transcripts.generate(spark, 300, seed = 7)
 
+  /** The transcript pipeline with `n` buckets per sink. */
+  private def buckets(n: Int) = {
+    val spec = TranscriptPipeline.spec
+    spec.copy(sink = spec.sink.map(_.copy(numBuckets = n)))
+  }
+
   private def routedFingerprint(dir: String): (Long, Long) = {
     val back = spark.read.parquet(s"$dir/events_routed")
     val cols = back.columns.sorted.map(c => col(c).cast("string"))
@@ -28,7 +34,7 @@ class FanOutResumeSpec extends AnyFunSuite {
 
   test("full run writes every routed row exactly once, partitioned by sink/bucket") {
     val dir = tmp()
-    val res = PipelineRunner.run(input, TableIO(dir), "run-a", numBuckets = 8)
+    val res = PipelineRunner.run(input, TableIO(dir), "run-a", spec = buckets(8))
     assert(res.complete)
     val back = spark.read.parquet(s"$dir/events_routed")
     assert(back.count() == TranscriptPipeline(input).count())
@@ -45,22 +51,22 @@ class FanOutResumeSpec extends AnyFunSuite {
   test("partial run + resume == clean one-shot run (byte-identical sinks)") {
     val dirA = tmp(); val dirB = tmp()
     // clean one-shot
-    PipelineRunner.run(input, TableIO(dirA), "run-clean", numBuckets = 8)
+    PipelineRunner.run(input, TableIO(dirA), "run-clean", spec = buckets(8))
     // crash after 5 of ~24 (sink,bucket) partitions
     val r1 = PipelineRunner.run(input, TableIO(dirB), "run-crash",
-      numBuckets = 8, maxBuckets = 5)
+      maxBuckets = 5, spec = buckets(8))
     assert(!r1.complete && r1.bucketsWritten == 5)
     // resume to completion
-    val r2 = PipelineRunner.run(input, TableIO(dirB), "run-crash", numBuckets = 8)
+    val r2 = PipelineRunner.run(input, TableIO(dirB), "run-crash", spec = buckets(8))
     assert(r2.complete)
     assert(routedFingerprint(dirA) == routedFingerprint(dirB))
   }
 
   test("re-running a completed run is a no-op (idempotent)") {
     val dir = tmp()
-    PipelineRunner.run(input, TableIO(dir), "run-x", numBuckets = 8)
+    PipelineRunner.run(input, TableIO(dir), "run-x", spec = buckets(8))
     val fp1 = routedFingerprint(dir)
-    val res = PipelineRunner.run(input, TableIO(dir), "run-x", numBuckets = 8)
+    val res = PipelineRunner.run(input, TableIO(dir), "run-x", spec = buckets(8))
     assert(res.bucketsWritten == 0)
     assert(routedFingerprint(dir) == fp1)
     // lineage not duplicated
@@ -122,7 +128,7 @@ class FanOutResumeSpec extends AnyFunSuite {
 
   test("aggregates table reflects exactly the written sinks") {
     val dir = tmp()
-    PipelineRunner.run(input, TableIO(dir), "run-agg", numBuckets = 8)
+    PipelineRunner.run(input, TableIO(dir), "run-agg", spec = buckets(8))
     val aggs = spark.read.parquet(s"$dir/sink_aggregates")
     val total = aggs.agg(sum("n_events")).collect().head.getLong(0)
     assert(total == spark.read.parquet(s"$dir/events_routed").count())
@@ -131,7 +137,7 @@ class FanOutResumeSpec extends AnyFunSuite {
   test("self-metrics table: per (sink, fmt) counts sum to total; parse failures surfaced") {
     val dir = tmp()
     val io = TableIO(dir)
-    PipelineRunner.run(input, io, "run-m", numBuckets = 4)
+    PipelineRunner.run(input, io, "run-m", spec = buckets(4))
     val m = spark.read.parquet(s"$dir/_metrics")
     val total = m.agg(sum("n_events")).collect().head.getLong(0)
     assert(total == spark.read.parquet(s"$dir/events_routed").count())
@@ -165,7 +171,7 @@ class FanOutResumeSpec extends AnyFunSuite {
   test("maxRecordsPerFile bounds rows per file (LogGroup batching parity)") {
     val dir = tmp()
     val io = TableIO(dir, maxRecordsPerFile = 200)
-    PipelineRunner.run(input, io, "run-files", numBuckets = 2)
+    PipelineRunner.run(input, io, "run-files", spec = buckets(2))
     val files = new java.io.File(s"$dir/events_routed")
     def parquetFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
