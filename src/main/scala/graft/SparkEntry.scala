@@ -35,6 +35,12 @@ object SparkEntry {
   // every sweep entry. Cache + materialize once per (session, dir) so
   // per-operator timings measure the operator. (Session-keyed: entries
   // die with their session; MEMORY_AND_DISK bounds heap at big SF.)
+  // The window leaves spark.sql.shuffle.partitions cached blocks (200
+  // by default) and AQE does not coalesce a cached plan, so every query
+  // would run one task per block. Queries read the cache through a
+  // coalesce to defaultParallelism instead: one wave of tasks, no
+  // shuffle. The cached plan itself stays as it is: packing it into
+  // fewer, larger blocks changes the bytes every cached scan reads.
   private val viewCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
@@ -43,7 +49,7 @@ object SparkEntry {
       val df = TranscriptView.load(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize eagerly, outside any query's timing
-      df
+      df.coalesce(spark.sparkContext.defaultParallelism)
     })
 
   private val nginxAnchored = s"^(?:${TranscriptPipeline.nginxRegex})$$"

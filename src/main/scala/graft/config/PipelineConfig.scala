@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import scala.jdk.CollectionConverters._
 import graft.ops._
 import graft.pipeline.TranscriptPipeline
-import graft.sink.StageMetrics
+import graft.sink.{FanOutWriter, StageMetrics, TableIO}
 
 /** Config-driven pipeline builder — the Spark analog of the reference's
   * pipeline-config surface (`Pipeline::Init`,
@@ -587,6 +587,17 @@ object PipelineConfig {
       if (topic.nonEmpty) Nil
       else (router.toSeq.flatMap(r => r.rules.map(_.sink) :+ r.defaultSink)
         ++ multicast.toSeq.flatMap(_.conditions.map(_._1))).distinct
+
+    /** The resumable fan-out writer the `sink` section describes (its
+      * table, bucket keys and count) over [[declaredSinks]] — the one
+      * writer both runners use. */
+    def writer(io: TableIO, extraPartCols: Seq[String] = Nil): FanOutWriter = {
+      val s = sink.getOrElse(throw new IllegalArgumentException(
+        "pipeline spec has no 'sink' section"))
+      FanOutWriter(io, table = s.table, numBuckets = s.numBuckets,
+        bucketKeys = s.bucketKeys, extraPartCols = extraPartCols,
+        sinks = declaredSinks)
+    }
   }
 
   def parse(text: String): Spec = {

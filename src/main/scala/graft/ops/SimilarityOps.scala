@@ -33,7 +33,8 @@ object SimilarityOps {
       lit(0.0), (acc, x) => acc + x)
     val na = sqrt(aggregate(ad, lit(0.0), (acc, x) => acc + x * x))
     val nb = sqrt(aggregate(bd, lit(0.0), (acc, x) => acc + x * x))
-    dot / (na * nb)
+    // a zero vector has no cosine: null, not an ANSI DIVIDE_BY_ZERO
+    try_divide(dot, na * nb)
   }
 
   /** (idCol, extra cols…, __v__, __n__): the double-cast vector plus its
@@ -54,12 +55,14 @@ object SimilarityOps {
     * moves ALL data to one task the moment a caller lifts the limit.
     * Ranks by ROUNDED cosine (4 dp) with the id tiebreak — the
     * engine-portable ranking rule: an unrounded rank-k boundary flips
-    * on last-ulp summation-order differences between engines. */
+    * on last-ulp summation-order differences between engines. A null
+    * cosine (zero vector) ranks last in both sorts. */
   private def rankTopK(scored: DataFrame, k: Int, idCol: String): DataFrame =
     scored.withColumn("__rc__", round(col("cos"), 4))
       .orderBy(col("__rc__").desc, col(idCol)).limit(k)
-      .agg(array_sort(collect_list(
-        struct((-col("__rc__")).as("nc"), col(idCol).as("id")))).as("__top__"))
+      .agg(array_sort(collect_list(struct(
+        coalesce(-col("__rc__"), lit(Double.PositiveInfinity)).as("nc"),
+        col(idCol).as("id")))).as("__top__"))
       .select(posexplode(col("__top__")).as(Seq("__p__", "__s__")))
       .select((col("__p__") + 1).cast("int").as("rank"),
         col("__s__").getField("id").as(idCol))
@@ -360,7 +363,7 @@ object SimilarityOps {
         .dropDuplicates("vec_a", "vec_b") // a pair can share several tables
       val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
         lit(0.0), (acc, x) => acc + x)
-      cand.withColumn("cos", round(dot / (col("na") * col("nb")), 4))
+      cand.withColumn("cos", round(try_divide(dot, col("na") * col("nb")), 4))
         .where(col("cos") >= threshold)
         .select("vec_a", "vec_b", "cos")
     }
@@ -580,7 +583,7 @@ object SimilarityOps {
       }
       val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
         lit(0.0), (acc, x) => acc + x)
-      base.withColumn("cos", round(dot / (col("na") * col("nb")), 4))
+      base.withColumn("cos", round(try_divide(dot, col("na") * col("nb")), 4))
         .where(col("cos") >= threshold)
         .select("vec_a", "vec_b", "cos")
     }
@@ -613,7 +616,8 @@ object SimilarityOps {
     val byQ = Window.partitionBy(col("__qid__"))
       .orderBy(col("__cos__").desc, col(idCol))
     def topk(cand: DataFrame): DataFrame =
-      cand.withColumn("__cos__", round(dot / (col("__n__") * col("__qn__")), 4))
+      cand.withColumn("__cos__",
+          round(try_divide(dot, col("__n__") * col("__qn__")), 4))
         .withColumn("__rn__", row_number().over(byQ))
         .where(col("__rn__") <= k)
         .select(col("__qid__"), col(idCol))
@@ -630,9 +634,9 @@ object SimilarityOps {
       // tiebreak) like every other cross-engine ranking here: an
       // unrounded rank boundary flips on last-ulp summation-order
       // differences between engines
-      .withColumn("__ccos__", round(
+      .withColumn("__ccos__", round(try_divide(
         aggregate(zip_with(col("__qv__"), col("__cvec__"), (x, y) => x * y),
-          lit(0.0), (a, x) => a + x) / (col("__qn__") * col("__cnorm__")), 4))
+          lit(0.0), (a, x) => a + x), col("__qn__") * col("__cnorm__")), 4))
       .withColumn("__crn__", row_number().over(
         Window.partitionBy(col("__qid__"))
           .orderBy(col("__ccos__").desc, col("__cell__").desc)))
@@ -742,7 +746,7 @@ object SimilarityOps {
       val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
         lit(0.0), (acc, x) => acc + x)
       a.join(b, Seq("cell")).where(col("vec_a") < col("vec_b"))
-        .withColumn("cos", round(dot / (col("na") * col("nb")), 4))
+        .withColumn("cos", round(try_divide(dot, col("na") * col("nb")), 4))
         .where(col("cos") >= threshold)
         .select("vec_a", "vec_b", "cell", "cos")
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import graft.config.PipelineConfig
 import graft.ops.AggOps
 import graft.pipeline.TranscriptPipeline
-import graft.sink.{FanOutWriter, Metrics, TableIO}
+import graft.sink.{Metrics, TableIO}
 
 /** Batch job entry: any pipeline spec — by default the north-star
   * transcripts → parse → enrich → route — then resumable fan-out write
@@ -27,21 +27,17 @@ object PipelineRunner {
   def run(input: DataFrame, io: TableIO, runId: String,
       maxBuckets: Int = Int.MaxValue,
       spec: PipelineConfig.Spec = TranscriptPipeline.spec): RunResult = {
-    val sink = spec.sink.getOrElse(throw new IllegalArgumentException(
-      "pipeline spec has no 'sink' section"))
-    val writer = FanOutWriter(io, table = sink.table,
-      numBuckets = sink.numBuckets, bucketKeys = sink.bucketKeys,
-      sinks = spec.declaredSinks)
+    val writer = spec.writer(io)
 
     val written = writer.write(spec(input), runId, maxBuckets)
 
     if (maxBuckets == Int.MaxValue) {
       // aggregates + self-metrics from the durably written table
-      val back = io.read(input.sparkSession, sink.table)
-      sink.aggBucket.foreach(b =>
+      val back = io.read(input.sparkSession, writer.table)
+      spec.sink.flatMap(_.aggBucket).foreach(b =>
         io.overwrite(AggOps.sinkAggregates(back, bucket = b),
           "sink_aggregates"))
-      if (written > 0) Metrics.record(io, runId, back, sink.bucketKeys)
+      if (written > 0) Metrics.record(io, runId, back, writer.bucketKeys)
       RunResult(runId, written, complete = true)
     } else RunResult(runId, written, complete = false)
   }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+import graft.config.PipelineConfig
 import graft.pipeline.TranscriptPipeline
-import graft.sink.{FanOutWriter, TableIO}
+import graft.sink.TableIO
 
 /** Structured-Streaming variant of the pipeline (SURVEY.md §2.11).
   *
@@ -24,17 +25,18 @@ import graft.sink.{FanOutWriter, TableIO}
   */
 object StreamingRunner {
 
-  /** Fan-out sink via foreachBatch + the resumable writer, over the
-    * transcript pipeline — parse→enrich→route is the identical plan to
-    * batch (the operators are all stateless projections/joins). */
+  /** Fan-out sink via foreachBatch + the resumable writer, over a
+    * pipeline spec (by default the transcript pipeline) — the processor
+    * line and router are the identical plan to batch (the operators are
+    * all stateless projections/joins). The spec's `sink` section names
+    * the table, its bucket keys and count. */
   def fanOutWriter(stream: DataFrame, io: TableIO, runPrefix: String,
-      numBuckets: Int = 32,
       trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
-      checkpoint: Option[String] = None): DataStreamWriter[Row] = {
-    val writer = FanOutWriter(io, numBuckets = numBuckets,
-      extraPartCols = Seq("__batch__"),
-      sinks = TranscriptPipeline.spec.declaredSinks)
-    val w = TranscriptPipeline(stream).writeStream
+      checkpoint: Option[String] = None,
+      spec: PipelineConfig.Spec = TranscriptPipeline.spec)
+      : DataStreamWriter[Row] = {
+    val writer = spec.writer(io, extraPartCols = Seq("__batch__"))
+    val w = spec(stream).writeStream
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

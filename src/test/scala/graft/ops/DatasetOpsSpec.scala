@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -669,6 +670,71 @@ class DatasetOpsSpec extends AnyFunSuite {
     val plan = sd.assigned(vecs).queryExecution.sparkPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastHashJoin"), s"no broadcast assign:\n$plan")
+  }
+
+  // two identical zero vectors (ids 3, 4) among non-zero ones: a zero
+  // vector has no cosine, so every path gives it null — it never passes
+  // a threshold and ranks last — and the non-zero results are unchanged
+  private def withZeros = Seq(
+    0L -> Seq(1f, 0f, 0f, 0f),
+    1L -> Seq(0f, 1f, 0f, 0f),
+    2L -> Seq(0.99f, 0.1f, 0f, 0f),
+    3L -> Seq(0f, 0f, 0f, 0f),
+    4L -> Seq(0f, 0f, 0f, 0f),
+    5L -> Seq(0.1f, 0.99f, 0f, 0f)).toDF("vec_id", "embedding")
+  private def nonZero = withZeros.where(!col("vec_id").isin(3L, 4L))
+  private def pairSet(df: DataFrame) =
+    df.select("vec_a", "vec_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("zero vectors: brute-force cosine top-k ranks them last; " +
+    "a zero query ranks by id") {
+    val q = Seq((99L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    def top(corpus: DataFrame, query: DataFrame, k: Int) =
+      SimilarityOps.bruteForceTopK(corpus, query, k).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    val all = top(withZeros, q, 6)
+    assert(all.take(4) == top(nonZero, q, 4))
+    assert(all.drop(4) == Seq(5 -> 3L, 6 -> 4L))
+    val zq = Seq((99L, Seq(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    assert(top(withZeros, zq, 3) == Seq(1 -> 0L, 2 -> 1L, 3 -> 2L))
+  }
+
+  test("zero vectors: embed near-dup (exact and LSH) and banded " +
+    "sign-LSH pairs never pair them, even with each other") {
+    val lsh = SimilarityOps.SignLsh(planes = 4, dims = 4)
+    val banded = SimilarityOps.BandedSignLsh(tables = 4, planes = 4, dims = 4)
+    val tiers = Seq[DataFrame => DataFrame](
+      SimilarityOps.EmbedNearDup(0.9, exact = true).pairs(_),
+      SimilarityOps.EmbedNearDup(0.9, lsh = lsh).pairs(_),
+      banded.pairs(_, 0.9))
+    assert(pairSet(tiers.head(withZeros)) == Set((0L, 2L), (1L, 5L)))
+    // the zero twins share every LSH bucket, so they are candidates
+    tiers.foreach(t => assert(pairSet(t(withZeros)) == pairSet(t(nonZero))))
+  }
+
+  test("zero vectors: semdedup keeps them, pairs nothing with them") {
+    // nlist=2 -> centroids 0 and 1; the zero twins share a cell
+    val sd = SimilarityOps.SemDeDup(nlist = 2, threshold = 0.9)
+    assert(pairSet(sd.pairs(withZeros)) == Set((0L, 2L), (1L, 5L)))
+    assert(sd.survivors(withZeros).select("vec_id").collect()
+      .map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 3L, 4L))
+  }
+
+  test("zero vectors: annRecall reports a zero query and a zero centroid") {
+    // queries are ids < 4, so id 3 is a zero query; nlist=4 makes it a
+    // zero centroid too
+    def recall(ivf: SimilarityOps.IvfIndex) =
+      SimilarityOps.annRecall(withZeros, nQueries = 4, k = 2, ivf,
+        SimilarityOps.BandedSignLsh(tables = 1, planes = 1, dims = 4)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+    // exhaustive probes: every query, the zero one included, finds its
+    // exact top-k (ranked by id when every cosine is null)
+    val full = recall(SimilarityOps.IvfIndex(nlist = 1, nprobe = 1))
+    assert(full.toSeq == (0L until 4L).map(q => (q, 1.0, 1.0)))
+    val probed = recall(SimilarityOps.IvfIndex(nlist = 4, nprobe = 1))
+    assert(probed.map(_._1).toSeq == (0L until 4L) &&
+      probed.forall(r => r._2 >= 0.0 && r._2 <= 1.0))
   }
 
   test("dedup sketches run UDF-free (no ScalaUDF in the plan)") {

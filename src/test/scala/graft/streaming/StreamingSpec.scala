@@ -26,6 +26,12 @@ class StreamingSpec extends AnyFunSuite {
   private def turnsOf(df: org.apache.spark.sql.DataFrame): Seq[Turn] =
     df.as[Turn].collect().toSeq
 
+  /** The transcript spec with `n` buckets per sink. */
+  private def buckets(n: Int) = {
+    val spec = TranscriptPipeline.spec
+    spec.copy(sink = spec.sink.map(_.copy(numBuckets = n)))
+  }
+
   test("foreachBatch fan-out: streaming micro-batches produce the same sinks as batch") {
     val dir = Files.createTempDirectory("graft-stream").toString
     val io = TableIO(dir)
@@ -35,7 +41,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val mem = MemoryStream[Turn](spark)
     val q = StreamingRunner.fanOutWriter(mem.toDF(), io, "st",
-        numBuckets = 4, trigger = Trigger.ProcessingTime(0L),
+        spec = buckets(4), trigger = Trigger.ProcessingTime(0L),
         checkpoint = Some(s"$dir/_ckpt"))
       .start()
     mem.addData(b1: _*)
@@ -68,7 +74,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val mem = MemoryStream[Turn](spark)
     def startQuery() = StreamingRunner.fanOutWriter(mem.toDF(), io, "rs",
-        numBuckets = 2, trigger = Trigger.ProcessingTime(0L),
+        spec = buckets(2), trigger = Trigger.ProcessingTime(0L),
         checkpoint = Some(s"$dir/_ckpt"))
       .start()
 
