@@ -76,8 +76,13 @@ object Lineage {
       .agg(count(lit(1)).as("n_rows"), bit_xor(col("__h__")).as("content_hash"))
     val withEmpty = if (expected.isEmpty) grouped else {
       import spark.implicits._
-      val exp = expected.toDF("sink", "bucket")
-      exp.join(grouped, Seq("sink", "bucket"), "left")
+      // ≤ sinks × buckets rows on both sides. The coordinate list in ONE
+      // partition probes the broadcast counts, so a run appends one
+      // lineage file, not one per task ([[completed]] re-reads them all
+      // on every later call). Coalescing the joined rows instead put the
+      // final aggregation of every partition in one task (64 MB peak).
+      val exp = expected.toDF("sink", "bucket").coalesce(1)
+      exp.join(broadcast(grouped), Seq("sink", "bucket"), "left")
         .select(col("sink"), col("bucket"),
           coalesce(col("n_rows"), lit(0L)).as("n_rows"),
           coalesce(col("content_hash"), lit(0L)).as("content_hash"))

@@ -74,6 +74,27 @@ class FanOutResumeSpec extends AnyFunSuite {
     assert(lin.select("sink", "bucket").distinct().count() == lin.count())
   }
 
+  test("a file:// root resumes: rerun is a no-op, partial + resume == one-shot") {
+    // lineage is found through the Hadoop FileSystem API, so a URI root
+    // resumes exactly like a plain path (it once re-wrote every bucket)
+    val dirA = tmp(); val dirB = tmp()
+    val ioA = TableIO("file://" + dirA); val ioB = TableIO("file://" + dirB)
+    def linRows(dir: String) = spark.read.parquet(s"$dir/_lineage").count()
+    PipelineRunner.run(input, ioA, "run-uri", spec = buckets(8))
+    val fp = routedFingerprint(dirA)
+    val lin = linRows(dirA)
+    val again = PipelineRunner.run(input, ioA, "run-uri", spec = buckets(8))
+    assert(again.bucketsWritten == 0)
+    assert(linRows(dirA) == lin)
+    assert(routedFingerprint(dirA) == fp)
+    val r1 = PipelineRunner.run(input, ioB, "run-uri",
+      maxBuckets = 5, spec = buckets(8))
+    assert(!r1.complete && r1.bucketsWritten == 5)
+    val r2 = PipelineRunner.run(input, ioB, "run-uri", spec = buckets(8))
+    assert(r2.complete && r2.bucketsWritten == lin - 5)
+    assert(routedFingerprint(dirB) == fp)
+  }
+
   test("a later run owns its declared partition space: empty sinks clear + zero-row lineage") {
     val s = spark; import s.implicits._
     val dir = tmp(); val io = TableIO(dir)
