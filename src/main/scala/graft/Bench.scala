@@ -34,13 +34,7 @@ object Bench {
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.builder(cpus).appName(s"graft-bench-$cpus")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

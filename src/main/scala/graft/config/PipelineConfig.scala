@@ -591,12 +591,11 @@ object PipelineConfig {
     /** The resumable fan-out writer the `sink` section describes (its
       * table, bucket keys and count) over [[declaredSinks]] — the one
       * writer both runners use. */
-    def writer(io: TableIO, extraPartCols: Seq[String] = Nil): FanOutWriter = {
+    def writer(io: TableIO): FanOutWriter = {
       val s = sink.getOrElse(throw new IllegalArgumentException(
         "pipeline spec has no 'sink' section"))
       FanOutWriter(io, table = s.table, numBuckets = s.numBuckets,
-        bucketKeys = s.bucketKeys, extraPartCols = extraPartCols,
-        sinks = declaredSinks)
+        bucketKeys = s.bucketKeys, sinks = declaredSinks)
     }
   }
 

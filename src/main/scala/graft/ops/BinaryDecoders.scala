@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Binary wire decoders that are not expressible as Catalyst
-  * expressions — snappy + protobuf payloads — implemented on the
-  * `mapPartitions` decoder seam (the same seam as
-  * [[MultimodalOps]]'s media decode): per-partition JVM decode of a
-  * binary column, everything before and after stays declarative.
+  * expressions — snappy + protobuf payloads — and the binary seam every
+  * such decoder and packer shares: [[appendRows]] (per-row decode
+  * appended to the input row, with the one hostile-payload drop
+  * policy), [[pack]] (partition-local payload packing under count/byte
+  * caps) and [[Encode]] (the protobuf wire writer). Everything before
+  * and after the seam stays declarative.
   *
   * Two reference decoders live here:
   *  - prometheus remote-write (`pkg/protocol/decoder/prometheus/
@@ -21,14 +23,12 @@ import org.apache.spark.sql.types._
   *    `LogGroup` → one row per `Log` with its contents map plus the
   *    group's topic/source/category/machineUUID/tags
   *    (`pkg/protocol/proto/sls_logs.proto`).
+  * [[PprofOps.PprofParser]] decodes on the same seam.
   *
   * The protobuf wire reader below is a from-scratch varint/
   * length-delimited scanner over the two fixed schemas (field numbers
   * cited inline) — no protobuf library dependency; snappy comes from
-  * the runtime's own `snappy-java`. A payload that fails to
-  * decompress or parse drops (the reference rejects the HTTP request;
-  * a batch table has no request to reject — same documented
-  * divergence as the text wire decoders).
+  * the runtime's own `snappy-java`.
   */
 object BinaryDecoders {
 
@@ -95,6 +95,74 @@ object BinaryDecoders {
   }
 
   private[ops] def root(bytes: Array[Byte]) = new Pb(bytes, 0, bytes.length)
+
+  // --- the binary seam -------------------------------------------------------
+
+  /** Per-row JVM decode of a binary payload: each input row yields the
+    * rows `decode` returns, each one the row's `keep` columns followed
+    * by `added` values. The hostile-payload drop lives here and only
+    * here: a row whose `decode` throws yields no rows (the reference
+    * rejects the HTTP request; a batch table has no request to reject
+    * — the same documented divergence as the text wire decoders).
+    * `decode` must return a strict Seq, so that it throws inside the
+    * policy. */
+  private[ops] def appendRows(df: DataFrame, added: Seq[StructField],
+      keep: StructField => Boolean = _ => true)(
+      decode: Row => Seq[Seq[Any]]): DataFrame = {
+    val kept = df.schema.fields.zipWithIndex.filter { case (f, _) => keep(f) }
+    val keepIdx = kept.map(_._2).toSeq
+    df.mapPartitions { rows =>
+      rows.flatMap { r =>
+        val decoded =
+          try decode(r)
+          catch { case _: Exception => Nil } // hostile payload → drop
+        val keepVals = keepIdx.map(r.get)
+        decoded.map(vs => Row.fromSeq(keepVals ++ vs))
+      }
+    }(Encoders.row(StructType(kept.map(_._1) ++ added)))
+  }
+
+  /** Partition-local packing: each input partition independently packs
+    * its rows, in order, into `(payload binary, <countCol> int)` rows —
+    * no shuffle, no driver state. `item` gives a row's packed item and
+    * its weight against `maxBytes`. A payload is flushed BEFORE adding
+    * an item would exceed either cap, so a single oversized item still
+    * ships alone (the reference sends it as its own group). */
+  private[ops] def pack[A](df: DataFrame, countCol: String, maxItems: Int,
+      maxBytes: Long = Long.MaxValue)(item: Row => (A, Long))(
+      encode: Seq[A] => Array[Byte]): DataFrame =
+    df.mapPartitions { rows =>
+      val buf = scala.collection.mutable.ArrayBuffer.empty[A]
+      var bytes = 0L
+      def flush(): Option[Row] =
+        if (buf.isEmpty) None
+        else {
+          val out = Row(encode(buf.toSeq), buf.size)
+          buf.clear(); bytes = 0L
+          Some(out)
+        }
+      rows.flatMap { r =>
+        val (a, size) = item(r)
+        val pre =
+          if (buf.nonEmpty && (buf.size >= maxItems || bytes + size > maxBytes))
+            flush()
+          else None
+        buf += a
+        bytes += size
+        pre
+      } ++ flush().iterator
+    }(Encoders.row(StructType(Array(
+      StructField("payload", BinaryType),
+      StructField(countCol, IntegerType)))))
+
+  /** Total time coercion for the packers: any integral column works; a
+    * null or a hostile non-numeric string reads 0 instead of killing
+    * the batch. */
+  private def asLong(v: Any): Long = v match {
+    case n: Number => n.longValue
+    case null => 0L
+    case other => scala.util.Try(String.valueOf(other).toLong).getOrElse(0L)
+  }
 
   // --- shared metric-log rendering (JVM twins of the Catalyst helpers) -----
 
@@ -186,28 +254,19 @@ object BinaryDecoders {
   final case class RemoteWriteParser(sourceKey: String = "payload",
       snappy: Boolean = true) {
     def apply(df: DataFrame): DataFrame = {
-      val inSchema = df.schema
-      val outSchema = StructType(inSchema.fields ++ Array(
+      val srcIdx = df.schema.fieldIndex(sourceKey)
+      val useSnappy = snappy
+      appendRows(df, Seq(
         StructField("__name__", StringType),
         StructField("__labels__", StringType),
         StructField("__time_nano__", LongType),
-        StructField("__value__", StringType)))
-      val srcIdx = inSchema.fieldIndex(sourceKey)
-      val useSnappy = snappy
-      df.mapPartitions { rows =>
-        rows.flatMap { r =>
-          val raw = r.get(srcIdx).asInstanceOf[Array[Byte]]
-          val decoded =
-            try {
-              val bytes =
-                if (useSnappy) org.xerial.snappy.Snappy.uncompress(raw)
-                else raw
-              parseWriteRequest(bytes)
-            } catch { case _: Exception => Nil } // hostile payload → drop
-          decoded.map(s => Row.fromSeq(r.toSeq ++ Seq(metricName(s.name),
-            renderLabels(s.labels), tnNorm(s.tsMs), goFmt(s.value))))
-        }
-      }(Encoders.row(outSchema))
+        StructField("__value__", StringType))) { r =>
+        val raw = r.get(srcIdx).asInstanceOf[Array[Byte]]
+        val bytes =
+          if (useSnappy) org.xerial.snappy.Snappy.uncompress(raw) else raw
+        parseWriteRequest(bytes).map(s => Seq(metricName(s.name),
+          renderLabels(s.labels), tnNorm(s.tsMs), goFmt(s.value)))
+      }
     }
   }
 
@@ -281,24 +340,15 @@ object BinaryDecoders {
     * group envelope columns appended to the input row. */
   final case class SlsPbParser(sourceKey: String = "payload") {
     def apply(df: DataFrame): DataFrame = {
-      val inSchema = df.schema
-      val outSchema = StructType(inSchema.fields ++ SlsFields.fields)
-      val srcIdx = inSchema.fieldIndex(sourceKey)
-      df.mapPartitions { rows =>
-        rows.flatMap { r =>
-          val raw = r.get(srcIdx).asInstanceOf[Array[Byte]]
-          val parsed =
-            try Some(groupOf(raw))
-            catch { case _: Exception => None } // malformed group → drop
-          parsed.toSeq.flatMap { case (logs, cat, topic, src, uuid, tags) =>
-            logs.map { case (time, timeNs, contents) =>
-              Row.fromSeq(r.toSeq ++ Seq(time,
-                timeNs.map(java.lang.Long.valueOf).orNull, contents,
-                topic, src, cat, uuid, tags))
-            }
-          }
+      val srcIdx = df.schema.fieldIndex(sourceKey)
+      appendRows(df, SlsFields.fields.toSeq) { r =>
+        val (logs, cat, topic, src, uuid, tags) =
+          groupOf(r.get(srcIdx).asInstanceOf[Array[Byte]])
+        logs.map { case (time, timeNs, contents) =>
+          Seq(time, timeNs.map(java.lang.Long.valueOf).orNull, contents,
+            topic, src, cat, uuid, tags)
         }
-      }(Encoders.row(outSchema))
+      }
     }
   }
 
@@ -324,10 +374,8 @@ object BinaryDecoders {
     * with no batch analog, and LZ4 transport compression is orthogonal
     * to the wire layout, so both are out of scope here).
     *
-    * Runs on the same mapPartitions seam as the decoders: each input
-    * partition independently packs its rows in order, so the operator
-    * is embarrassingly parallel — no shuffle, no driver state — and
-    * `SlsPbParser(this(df))` round-trips the exact row set (the
+    * Packs with [[pack]], so the operator is embarrassingly parallel
+    * and `SlsPbParser(this(df))` round-trips the exact row set (the
     * pack boundary is partition-dependent, the decoded rows are not).
     * Output: one row per payload (`payload` binary, `n_logs`). */
   final case class SlsPbWriter(
@@ -341,59 +389,28 @@ object BinaryDecoders {
     require(maxLogs > 0 && maxBytes > 0, "caps must be positive")
 
     def apply(df: DataFrame): DataFrame = {
-      val outSchema = StructType(Array(
-        StructField("payload", BinaryType),
-        StructField("n_logs", IntegerType)))
       val inSchema = df.schema
       val tIdx = inSchema.fieldIndex(timeKey)
       val cIdx = contentKeys.map(k => k -> inSchema.fieldIndex(k))
-      val (tpc, src, tgs, ml, mb) = (topic, source, tags, maxLogs, maxBytes)
-      df.mapPartitions { rows =>
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Seq[(String, String)])]
-        var bytes = 0L
-        def flush(): Option[Row] =
-          if (buf.isEmpty) None
-          else {
-            val p = Encode.logGroup(tpc, src, tgs, buf.toSeq)
-            val n = buf.size
-            buf.clear(); bytes = 0L
-            Some(Row(p, n))
-          }
-        rows.flatMap { r =>
-          // null values render as "" (proto3 strings have no null; the
-          // literal string "null" would fabricate data on the far side)
-          val contents = cIdx.map { case (k, i) =>
-            k -> (r.get(i) match {
-              case null => ""
-              case v => String.valueOf(v)
-            })
-          }
-          // cap accounting in ENCODED UTF-8 bytes, not UTF-16 chars —
-          // char counting undershoots ~3x on CJK text and would ship
-          // groups past the server-side size limit the cap exists for
-          val sz = contents.iterator.map { case (k, v) =>
-            k.getBytes(java.nio.charset.StandardCharsets.UTF_8).length +
-              v.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 8
-          }.sum + 16
-          // flush BEFORE exceeding a cap (a single oversized row still
-          // ships alone — the reference sends it as its own group)
-          val pre =
-            if (buf.nonEmpty &&
-              (buf.size >= ml || bytes + sz > mb)) flush()
-            else None
-          buf += ((r.get(tIdx) match { // any integral time column works
-            case n: Number => n.longValue
-            case null => 0L // total: a null time must not kill the batch
-            // a hostile non-numeric string time must not kill the batch
-            // either — same total-function posture as the decoders
-            case other => scala.util.Try(
-              String.valueOf(other).toLong).getOrElse(0L)
-          }, contents))
-          bytes += sz
-          pre
-        } ++ flush().iterator
-      }(Encoders.row(outSchema))
+      val (tpc, src, tgs) = (topic, source, tags)
+      pack(df, "n_logs", maxLogs, maxBytes.toLong) { r =>
+        // null values render as "" (proto3 strings have no null; the
+        // literal string "null" would fabricate data on the far side)
+        val contents = cIdx.map { case (k, i) =>
+          k -> (r.get(i) match {
+            case null => ""
+            case v => String.valueOf(v)
+          })
+        }
+        // cap accounting in ENCODED UTF-8 bytes, not UTF-16 chars —
+        // char counting undershoots ~3x on CJK text and would ship
+        // groups past the server-side size limit the cap exists for
+        val sz = contents.iterator.map { case (k, v) =>
+          k.getBytes(java.nio.charset.StandardCharsets.UTF_8).length +
+            v.getBytes(java.nio.charset.StandardCharsets.UTF_8).length + 8
+        }.sum + 16
+        ((asLong(r.get(tIdx)), contents), sz.toLong)
+      }(Encode.logGroup(tpc, src, tgs, _))
     }
   }
 
@@ -412,11 +429,10 @@ object BinaryDecoders {
     * every metric decoder emits ([[RemoteWriteParser]], influx, statsd,
     * prometheus text): `__name__`, `__labels__` (`k#$#v|…` rendering),
     * `__time_nano__`, `__value__` (string; `__STALE_NAN__` round-trips
-    * to the staleness-marker bits). Same mapPartitions seam and posture
-    * as [[SlsPbWriter]]: partition-local packing, no shuffle, no driver
-    * state; `RemoteWriteParser(this(df))` reproduces the exact row set
-    * (pack boundaries are partition-dependent, the rows are not) —
-    * except that a `|` INSIDE a label value (readSortedLabels
+    * to the staleness-marker bits). Packs with [[pack]] like
+    * [[SlsPbWriter]]; `RemoteWriteParser(this(df))` reproduces the exact
+    * row set (pack boundaries are partition-dependent, the rows are
+    * not) — except that a `|` INSIDE a label value (readSortedLabels
     * continuation, [[readLabels]]) reaches the wire intact but decodes
     * back sanitized to `_`, because helper.MetricLabels rendering does
     * exactly that in the reference too.
@@ -431,64 +447,42 @@ object BinaryDecoders {
     require(seriesLimit > 0, "seriesLimit must be positive")
 
     def apply(df: DataFrame): DataFrame = {
-      val outSchema = StructType(Array(
-        StructField("payload", BinaryType),
-        StructField("n_series", IntegerType)))
       val inSchema = df.schema
       val nIdx = inSchema.fieldIndex(nameKey)
       val lIdx = inSchema.fieldIndex(labelsKey)
       val tIdx = inSchema.fieldIndex(timeKey)
       val vIdx = inSchema.fieldIndex(valueKey)
-      val (limit, compress) = (seriesLimit, snappy)
-      df.mapPartitions { rows =>
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Seq[(String, String)], Seq[(Double, Long)])]
-        def flush(): Option[Row] =
-          if (buf.isEmpty) None
-          else {
-            val raw = Encode.writeRequestRaw(buf.toSeq)
-            val n = buf.size
-            buf.clear()
-            Some(Row(
-              if (compress) org.xerial.snappy.Snappy.compress(raw) else raw,
-              n))
+      val compress = snappy
+      pack(df, "n_series", seriesLimit) { r =>
+        // total-function posture: null/hostile fields coerce, never
+        // kill the batch (the decoders' twin discipline)
+        val name = if (r.isNullAt(nIdx)) "" else String.valueOf(r.get(nIdx))
+        val labelStr =
+          if (r.isNullAt(lIdx)) "" else String.valueOf(r.get(lIdx))
+        val tags = readLabels(labelStr)
+        val value = if (r.isNullAt(vIdx)) 0.0 else
+          String.valueOf(r.get(vIdx)) match {
+            case "__STALE_NAN__" =>
+              java.lang.Double.longBitsToDouble(StaleNaNBits)
+            case s => scala.util.Try(s.toDouble).getOrElse(0.0)
           }
-        rows.flatMap { r =>
-          val pre = if (buf.size >= limit) flush() else None
-          // total-function posture: null/hostile fields coerce, never
-          // kill the batch (the decoders' twin discipline)
-          val name = if (r.isNullAt(nIdx)) "" else String.valueOf(r.get(nIdx))
-          val labelStr =
-            if (r.isNullAt(lIdx)) "" else String.valueOf(r.get(lIdx))
-          val tags = readLabels(labelStr)
-          val tn = r.get(tIdx) match {
-            case n: Number => n.longValue
-            case null => 0L
-            case other => scala.util.Try(
-              String.valueOf(other).toLong).getOrElse(0L)
+        // labels: tags + __name__, lexicographically sorted, empties
+        // dropped (utils.go:63-99); nanos → ms (utils.go:52-59).
+        // Dedup by key (last wins) first: the reference builds the
+        // set from a MAP, so duplicate keys — a repeated tag or a
+        // __name__ entry inside the label string — cannot reach the
+        // wire there; here they would make an invalid WriteRequest
+        val labels = (tags :+ (metricNameKey -> name))
+          .foldLeft(Vector.empty[(String, String)]) {
+            case (acc, (k, v)) => acc.filterNot(_._1 == k) :+ (k -> v)
           }
-          val value = if (r.isNullAt(vIdx)) 0.0 else
-            String.valueOf(r.get(vIdx)) match {
-              case "__STALE_NAN__" =>
-                java.lang.Double.longBitsToDouble(StaleNaNBits)
-              case s => scala.util.Try(s.toDouble).getOrElse(0.0)
-            }
-          // labels: tags + __name__, lexicographically sorted, empties
-          // dropped (utils.go:63-99); nanos → ms (utils.go:52-59).
-          // Dedup by key (last wins) first: the reference builds the
-          // set from a MAP, so duplicate keys — a repeated tag or a
-          // __name__ entry inside the label string — cannot reach the
-          // wire there; here they would make an invalid WriteRequest
-          val labels = (tags :+ (metricNameKey -> name))
-            .foldLeft(Vector.empty[(String, String)]) {
-              case (acc, (k, v)) => acc.filterNot(_._1 == k) :+ (k -> v)
-            }
-            .filter { case (k, v) => k.nonEmpty && v.nonEmpty }
-            .sortBy(_._1)
-          buf += ((labels, Seq((value, tn / 1000000L))))
-          pre
-        } ++ flush().iterator
-      }(Encoders.row(outSchema))
+          .filter { case (k, v) => k.nonEmpty && v.nonEmpty }
+          .sortBy(_._1)
+        ((labels, Seq((value, asLong(r.get(tIdx)) / 1000000L))), 0L)
+      } { series =>
+        val raw = Encode.writeRequestRaw(series)
+        if (compress) org.xerial.snappy.Snappy.compress(raw) else raw
+      }
     }
   }
 
@@ -529,25 +523,30 @@ object BinaryDecoders {
     out.toSeq
   }
 
-  // --- test-vector encoders -------------------------------------------------
+  // --- protobuf wire writer -------------------------------------------------
 
-  /** Hand-rolled wire-format writers used by specs and the
-    * deterministic driver fixtures (the inverse of the readers above;
+  /** Hand-rolled wire-format writers (the inverse of the readers above;
     * a reference system would produce these same bytes with prompb /
-    * sls_logs marshalling). */
+    * sls_logs marshalling): the packers' encoders, the specs' and the
+    * deterministic driver fixtures' test vectors, and the field helpers
+    * [[PprofOps.Encode]] builds `profile.proto` from. */
   object Encode {
-    private def varint(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
+    private[ops] def varint(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
       var v = v0
       while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
       out.write(v.toInt)
     }
     private def keyed(out: java.io.ByteArrayOutputStream, field: Int,
         wire: Int): Unit = varint(out, (field.toLong << 3) | wire)
+    private[ops] def varintField(out: java.io.ByteArrayOutputStream,
+        field: Int, v: Long): Unit = {
+      keyed(out, field, 0); varint(out, v)
+    }
     private def bytesField(out: java.io.ByteArrayOutputStream, field: Int,
         b: Array[Byte]): Unit = {
       keyed(out, field, 2); varint(out, b.length.toLong); out.write(b)
     }
-    private def strField(out: java.io.ByteArrayOutputStream, field: Int,
+    private[ops] def strField(out: java.io.ByteArrayOutputStream, field: Int,
         s: String): Unit =
       bytesField(out, field, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     private def msg(f: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
@@ -555,6 +554,10 @@ object BinaryDecoders {
       f(out)
       out.toByteArray
     }
+    /** A length-delimited sub-message field whose body `f` writes. */
+    private[ops] def sub(out: java.io.ByteArrayOutputStream, field: Int)(
+        f: java.io.ByteArrayOutputStream => Unit): Unit =
+      bytesField(out, field, msg(f))
 
     /** prompb.WriteRequest bytes (uncompressed), `__name__` prepended
       * to the given labels — the fixture-building convenience. */
@@ -572,24 +575,22 @@ object BinaryDecoders {
         series: Seq[(Seq[(String, String)], Seq[(Double, Long)])])
         : Array[Byte] = msg { out =>
       series.foreach { case (labels, samples) =>
-        bytesField(out, 1, msg { ts =>
+        sub(out, 1) { ts =>
           labels.foreach { case (k, v) =>
-            bytesField(ts, 1, msg { lb =>
-              strField(lb, 1, k); strField(lb, 2, v)
-            })
+            sub(ts, 1) { lb => strField(lb, 1, k); strField(lb, 2, v) }
           }
           samples.foreach { case (value, tsMs) =>
-            bytesField(ts, 2, msg { sm =>
+            sub(ts, 2) { sm =>
               keyed(sm, 1, 1)
               // RAW bits: doubleToLongBits canonicalizes NaNs and would
               // destroy the Prometheus staleness marker payload
               val bits = java.lang.Double.doubleToRawLongBits(value)
               var i = 0
               while (i < 8) { sm.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
-              keyed(sm, 2, 0); varint(sm, tsMs)
-            })
+              varintField(sm, 2, tsMs)
+            }
           }
-        })
+        }
       }
     }
 
@@ -598,17 +599,17 @@ object BinaryDecoders {
         tags: Seq[(String, String)],
         logs: Seq[(Long, Seq[(String, String)])]): Array[Byte] = msg { out =>
       logs.foreach { case (time, contents) =>
-        bytesField(out, 1, msg { lg =>
-          keyed(lg, 1, 0); varint(lg, time)
+        sub(out, 1) { lg =>
+          varintField(lg, 1, time)
           contents.foreach { case (k, v) =>
-            bytesField(lg, 2, msg { c => strField(c, 1, k); strField(c, 2, v) })
+            sub(lg, 2) { c => strField(c, 1, k); strField(c, 2, v) }
           }
-        })
+        }
       }
       if (topic.nonEmpty) strField(out, 3, topic)
       if (source.nonEmpty) strField(out, 4, source)
       tags.foreach { case (k, v) =>
-        bytesField(out, 6, msg { t => strField(t, 1, k); strField(t, 2, v) })
+        sub(out, 6) { t => strField(t, 1, k); strField(t, 2, v) }
       }
     }
   }

@@ -62,7 +62,12 @@ object MultimodalOps {
   /** Append decode results to `df`: columns (width int, height int,
     * channels int, features array<double>). Null payloads pass through
     * with null decode columns. Runs per-partition in `batchSize` groups
-    * through `decoder.decodeBatch`. */
+    * through `decoder.decodeBatch`. A batch the decoder throws on is
+    * decoded again one payload at a time, and a payload that still
+    * throws keeps its row with null decode columns, like a null payload.
+    * This keeps its own per-partition loop rather than
+    * [[BinaryDecoders.appendRows]]: it decodes whole batches, and a
+    * failed payload keeps its row instead of dropping it. */
   def decode(df: DataFrame, binaryCol: String, decoder: Decoder = Md5FakeDecoder,
       batchSize: Int = 64): DataFrame = {
     val inSchema = df.schema
@@ -72,21 +77,23 @@ object MultimodalOps {
       StructField("channels", IntegerType),
       StructField("features", ArrayType(DoubleType))))
     val binIdx = inSchema.fieldIndex(binaryCol)
+    def decodeTotal(payloads: Seq[Array[Byte]]): Seq[Option[Decoded]] =
+      try decoder.decodeBatch(payloads).map(Some(_))
+      catch { case _: Exception =>
+        payloads.map { p =>
+          try decoder.decodeBatch(Seq(p)).headOption
+          catch { case _: Exception => None }
+        }
+      }
     val result = df.mapPartitions { rows =>
       rows.grouped(batchSize).flatMap { batch =>
-        val (withPayload, without) = batch.zipWithIndex
-          .partition(_._1.get(binIdx) != null)
-        val decoded = decoder.decodeBatch(
-          withPayload.map(_._1.getAs[Array[Byte]](binIdx)))
-        val merged = new Array[Row](batch.size)
-        withPayload.zip(decoded).foreach { case ((row, i), d) =>
-          merged(i) = Row.fromSeq(row.toSeq ++
-            Seq(d.width, d.height, d.channels, d.features.toSeq))
+        val payloads = batch.map(r => Option(r.getAs[Array[Byte]](binIdx)))
+        val decoded = decodeTotal(payloads.flatten).iterator
+        batch.zip(payloads).map { case (row, p) =>
+          val d = if (p.isEmpty) None else decoded.next()
+          Row.fromSeq(row.toSeq ++ d.fold(Seq[Any](null, null, null, null))(
+            d => Seq(d.width, d.height, d.channels, d.features.toSeq)))
         }
-        without.foreach { case (row, i) =>
-          merged(i) = Row.fromSeq(row.toSeq ++ Seq(null, null, null, null))
-        }
-        merged
       }
     }(Encoders.row(outSchema))
     result.toDF()

@@ -1,13 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Pyroscope push-ingest profile decode — the **pprof** wire format
   * (gzipped `profile.proto` protobuf), the endpoint's dominant real
-  * payload, on the same `mapPartitions` binary seam as
-  * [[BinaryDecoders]] (protobuf genuinely is not a Catalyst
-  * expression).
+  * payload, on [[BinaryDecoders]]' binary seam (protobuf genuinely is
+  * not a Catalyst expression).
   *
   * Reference: `pkg/helper/profile/pyroscope/pprof/pyroscope.go:107-163`
   * (readTrees: reverse-order location walk, reverse-order inline-line
@@ -242,10 +241,11 @@ object PprofOps {
   private val GzipMagic = 0x1f
 
   /** Decompression cap: a hostile few-KB gzip bomb expanding to
-    * gigabytes would OutOfMemoryError — an Error, NOT the Exception
-    * decodeRow's total-function catch handles — and kill the whole
-    * batch. Bounding the inflate keeps the failure an IOException the
-    * drop path absorbs; 64 MiB is far above any real pprof body. */
+    * gigabytes would OutOfMemoryError — an Error, NOT the Exception the
+    * seam's drop policy ([[BinaryDecoders.appendRows]]) handles — and
+    * kill the whole batch. Bounding the inflate keeps the failure an
+    * IOException the drop path absorbs; 64 MiB is far above any real
+    * pprof body. */
   private[ops] val MaxInflatedBytes: Int = 64 << 20
 
   private[ops] def gunzipIfNeeded(raw: Array[Byte]): Array[Byte] =
@@ -306,10 +306,15 @@ object PprofOps {
       val paramCols =
         Seq(sourceKey, nameKey, fromKey, untilKey, sampleRateKey,
           spyNameKey, aggTypeKey)
-      val passthrough = inSchema.fields.filterNot(f =>
-        paramCols.contains(f.name) ||
-          PyroscopeOps.FieldNames.contains(f.name))
-      val outSchema = StructType(passthrough ++ Array(
+      val srcIdx = inSchema.fieldIndex(sourceKey)
+      def idxOpt(k: String): Int =
+        if (inSchema.fieldNames.contains(k)) inSchema.fieldIndex(k) else -1
+      val (nameIdx, fromIdx, untilIdx, rateIdx, spyIdx, aggIdx) =
+        (idxOpt(nameKey), idxOpt(fromKey), idxOpt(untilKey),
+          idxOpt(sampleRateKey), idxOpt(spyNameKey), idxOpt(aggTypeKey))
+      val staticTags = tags
+
+      BinaryDecoders.appendRows(df, Seq(
         StructField("name", StringType), StructField("stack", StringType),
         StructField("stackID", StringType),
         StructField("language", StringType), StructField("type", StringType),
@@ -320,177 +325,166 @@ object PprofOps {
         StructField("durationNs", LongType),
         StructField("profileID", StringType),
         StructField("labels", StringType), StructField("val", StringType),
-        StructField("_ts_", TimestampType)))
-      val passIdx = passthrough.map(f => inSchema.fieldIndex(f.name))
-      val srcIdx = inSchema.fieldIndex(sourceKey)
-      def idxOpt(k: String): Int =
-        if (inSchema.fieldNames.contains(k)) inSchema.fieldIndex(k) else -1
-      val (nameIdx, fromIdx, untilIdx, rateIdx, spyIdx, aggIdx) =
-        (idxOpt(nameKey), idxOpt(fromKey), idxOpt(untilKey),
-          idxOpt(sampleRateKey), idxOpt(spyNameKey), idxOpt(aggTypeKey))
-      val staticTags = tags
-
-      df.mapPartitions { rows =>
-        rows.flatMap { r =>
-          decodeRow(r, srcIdx, nameIdx, fromIdx, untilIdx, rateIdx,
-            spyIdx, aggIdx, passIdx, staticTags)
-        }
-      }(Encoders.row(outSchema))
+        StructField("_ts_", TimestampType)),
+        keep = f => !paramCols.contains(f.name) &&
+          !PyroscopeOps.FieldNames.contains(f.name)) { r =>
+        decodeRow(r, srcIdx, nameIdx, fromIdx, untilIdx, rateIdx,
+          spyIdx, aggIdx, staticTags)
+      }
     }
 
     private def strAt(r: Row, i: Int): Option[String] =
       if (i < 0 || r.isNullAt(i)) None
       else Some(String.valueOf(r.get(i)))
 
-    /** The whole per-request decode; any malformed payload drops the
-      * row (total-function posture of every decoder on this seam). */
+    /** The whole per-request decode: the CallStack values of each
+      * output row. A malformed payload throws, and the seam drops the
+      * row. */
     private def decodeRow(r: Row, srcIdx: Int, nameIdx: Int, fromIdx: Int,
         untilIdx: Int, rateIdx: Int, spyIdx: Int, aggIdx: Int,
-        passIdx: Seq[Int], staticTags: Map[String, String]): Seq[Row] =
-      try {
-        // ---- request metadata (decoder.go:48-156 param handling) ----
-        val nameRaw = strAt(r, nameIdx).map(_.trim).getOrElse("")
-        if (nameRaw.isEmpty) return Nil // segment.ParseKey rejects
-        val brace = {
-          val b = nameRaw.indexOf('{')
-          if (b < 0) Seq.empty[(String, String)]
-          else nameRaw.substring(b + 1, math.max(b + 1,
-            nameRaw.lastIndexOf('}'))).split(",").toSeq
-            .filter(_.contains("="))
-            .map { t =>
-              val e = t.indexOf('=')
-              t.substring(0, e).trim -> t.substring(e + 1).trim
-            }
-        }
-        val base0 = nameRaw.takeWhile(_ != '{').trim
-        val appName =
-          if (base0.endsWith(".cpu")) base0.dropRight(4) else base0
-        val spyRaw = strAt(r, spyIdx).getOrElse("")
-        val spy =
-          if (spyRaw.isEmpty) "unknown"
-          else spyRaw.stripPrefix("pyroscope-").replaceAll("spy$", "")
-        val aggDefault = strAt(r, aggIdx).filter(_.nonEmpty).getOrElse("sum")
-        val rate = strAt(r, rateIdx).flatMap(s =>
-          scala.util.Try(s.toLong).toOption).getOrElse(100L)
-        val fromSec = strAt(r, fromIdx).flatMap(s =>
-          scala.util.Try(s.toLong).toOption)
-        val untilSec = strAt(r, untilIdx).flatMap(s =>
-          scala.util.Try(s.toLong).toOption)
-
-        // meta.Tags = segment-key labels (+_sample_rate_, pprof.go:131)
-        val keyLabels = (("__name__" -> appName) +: brace).toMap
-        val metaTags =
-          if (rate > 0) keyLabels + ("_sample_rate_" -> rate.toString)
-          else keyLabels
-        // profileID from the PRE-tag-merge key labels (meta.go:121-130)
-        val profileID = keyLabels.getOrElse("profile_id", {
-          val durNs = for (u <- untilSec; f <- fromSec)
-            yield (u - f) * 1000000000L
-          val md = graft.functions.PortableHash.md5Hex(
-            appName + "\u0000" + fromSec.map(_.toString).getOrElse("") +
-              "\u0000" + durNs.map(_.toString).getOrElse(""))
-          Seq(md.substring(0, 8), md.substring(8, 12), md.substring(12, 16),
-            md.substring(16, 20), md.substring(20, 32)).mkString("-")
-        })
-
-        // ---- profile decode -----------------------------------------
-        val raw = r.get(srcIdx).asInstanceOf[Array[Byte]]
-        val p = parseProfile(gunzipIfNeeded(raw))
-        def str(i: Long): String = p.strings.lift(i.toInt).getOrElse("")
-
-        // kept = known non-cumulative sample types (cumulative emit
-        // nothing without a previous profile — pprof.go:220-229)
-        val kept = p.sampleTypes.zipWithIndex.flatMap { case (vt, i) =>
-          DefaultSampleTypes.get(str(vt.typ))
-            .filterNot(_.cumulative).map(c => (i, str(vt.typ), str(vt.unit), c))
-        }
-        if (kept.isEmpty) return Nil
-        val perNs = periodNanos(p)
-
-        // ---- readTrees (pyroscope.go:107-163) ------------------------
-        // (stack frames leaf→root, resolved sample labels) → per kept
-        // type summed value; profile_id exemplars count in BOTH the
-        // labeled entry and the cut-label baseline
-        val acc = scala.collection.mutable.LinkedHashMap
-          .empty[(Seq[String], Map[String, String]), Array[Long]]
-        p.samples.foreach { s =>
-          // reverse location walk, reverse inline-line walk, skip
-          // unknown locations/functions and empty names
-          val rootFirst = scala.collection.mutable.ArrayBuffer.empty[String]
-          var i = s.locs.length - 1
-          while (i >= 0) {
-            p.locLines.get(s.locs(i)).foreach { fns =>
-              var j = fns.length - 1
-              while (j >= 0) {
-                val fid = fns(j)
-                val nm = p.fnName.get(fid).map(str).getOrElse("")
-                if (nm.nonEmpty)
-                  rootFirst += s"$nm ${p.fnFile.get(fid).map(str).getOrElse("")}"
-                j -= 1
-              }
-            }
-            i -= 1
+        staticTags: Map[String, String]): Seq[Seq[Any]] = {
+      // ---- request metadata (decoder.go:48-156 param handling) ----
+      val nameRaw = strAt(r, nameIdx).map(_.trim).getOrElse("")
+      if (nameRaw.isEmpty) return Nil // segment.ParseKey rejects
+      val brace = {
+        val b = nameRaw.indexOf('{')
+        if (b < 0) Seq.empty[(String, String)]
+        else nameRaw.substring(b + 1, math.max(b + 1,
+          nameRaw.lastIndexOf('}'))).split(",").toSeq
+          .filter(_.contains("="))
+          .map { t =>
+            val e = t.indexOf('=')
+            t.substring(0, e).trim -> t.substring(e + 1).trim
           }
-          val leafFirst = rootFirst.reverse.toSeq
-          if (leafFirst.nonEmpty) {
-            val resolved = s.labels.flatMap { case (k, v) =>
-              val ks = str(k); val vs = str(v)
-              if (ks.isEmpty || vs.isEmpty) None else Some(ks -> vs)
-            }.toMap
-            val labelSets =
-              if (resolved.contains("profile_id"))
-                Seq(resolved, resolved - "profile_id") // exemplar + baseline
-              else Seq(resolved)
-            labelSets.foreach { ls =>
-              val slot = acc.getOrElseUpdate((leafFirst, ls),
-                new Array[Long](kept.size))
-              kept.zipWithIndex.foreach { case ((vi, _, _, _), ki) =>
-                val v = if (vi < s.values.length) s.values(vi) else 0L
-                if (v != 0) slot(ki) += v
-              }
+      }
+      val base0 = nameRaw.takeWhile(_ != '{').trim
+      val appName =
+        if (base0.endsWith(".cpu")) base0.dropRight(4) else base0
+      val spyRaw = strAt(r, spyIdx).getOrElse("")
+      val spy =
+        if (spyRaw.isEmpty) "unknown"
+        else spyRaw.stripPrefix("pyroscope-").replaceAll("spy$", "")
+      val aggDefault = strAt(r, aggIdx).filter(_.nonEmpty).getOrElse("sum")
+      val rate = strAt(r, rateIdx).flatMap(s =>
+        scala.util.Try(s.toLong).toOption).getOrElse(100L)
+      val fromSec = strAt(r, fromIdx).flatMap(s =>
+        scala.util.Try(s.toLong).toOption)
+      val untilSec = strAt(r, untilIdx).flatMap(s =>
+        scala.util.Try(s.toLong).toOption)
+
+      // meta.Tags = segment-key labels (+_sample_rate_, pprof.go:131)
+      val keyLabels = (("__name__" -> appName) +: brace).toMap
+      val metaTags =
+        if (rate > 0) keyLabels + ("_sample_rate_" -> rate.toString)
+        else keyLabels
+      // profileID from the PRE-tag-merge key labels (meta.go:121-130)
+      val profileID = keyLabels.getOrElse("profile_id", {
+        val durNs = for (u <- untilSec; f <- fromSec)
+          yield (u - f) * 1000000000L
+        val md = graft.functions.PortableHash.md5Hex(
+          appName + "\u0000" + fromSec.map(_.toString).getOrElse("") +
+            "\u0000" + durNs.map(_.toString).getOrElse(""))
+        Seq(md.substring(0, 8), md.substring(8, 12), md.substring(12, 16),
+          md.substring(16, 20), md.substring(20, 32)).mkString("-")
+      })
+
+      // ---- profile decode -----------------------------------------
+      val raw = r.get(srcIdx).asInstanceOf[Array[Byte]]
+      val p = parseProfile(gunzipIfNeeded(raw))
+      def str(i: Long): String = p.strings.lift(i.toInt).getOrElse("")
+
+      // kept = known non-cumulative sample types (cumulative emit
+      // nothing without a previous profile — pprof.go:220-229)
+      val kept = p.sampleTypes.zipWithIndex.flatMap { case (vt, i) =>
+        DefaultSampleTypes.get(str(vt.typ))
+          .filterNot(_.cumulative).map(c => (i, str(vt.typ), str(vt.unit), c))
+      }
+      if (kept.isEmpty) return Nil
+      val perNs = periodNanos(p)
+
+      // ---- readTrees (pyroscope.go:107-163) ------------------------
+      // (stack frames leaf→root, resolved sample labels) → per kept
+      // type summed value; profile_id exemplars count in BOTH the
+      // labeled entry and the cut-label baseline
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[(Seq[String], Map[String, String]), Array[Long]]
+      p.samples.foreach { s =>
+        // reverse location walk, reverse inline-line walk, skip
+        // unknown locations/functions and empty names
+        val rootFirst = scala.collection.mutable.ArrayBuffer.empty[String]
+        var i = s.locs.length - 1
+        while (i >= 0) {
+          p.locLines.get(s.locs(i)).foreach { fns =>
+            var j = fns.length - 1
+            while (j >= 0) {
+              val fid = fns(j)
+              val nm = p.fnName.get(fid).map(str).getOrElse("")
+              if (nm.nonEmpty)
+                rootFirst += s"$nm ${p.fnFile.get(fid).map(str).getOrElse("")}"
+              j -= 1
+            }
+          }
+          i -= 1
+        }
+        val leafFirst = rootFirst.reverse.toSeq
+        if (leafFirst.nonEmpty) {
+          val resolved = s.labels.flatMap { case (k, v) =>
+            val ks = str(k); val vs = str(v)
+            if (ks.isEmpty || vs.isEmpty) None else Some(ks -> vs)
+          }.toMap
+          val labelSets =
+            if (resolved.contains("profile_id"))
+              Seq(resolved, resolved - "profile_id") // exemplar + baseline
+            else Seq(resolved)
+          labelSets.foreach { ls =>
+            val slot = acc.getOrElseUpdate((leafFirst, ls),
+              new Array[Long](kept.size))
+            kept.zipWithIndex.foreach { case ((vi, _, _, _), ki) =>
+              val v = if (vi < s.values.length) s.values(vi) else 0L
+              if (v != 0) slot(ki) += v
             }
           }
         }
+      }
 
-        // ---- emit (pprof.go:234-351) ---------------------------------
-        val (startNs, endNs): (Long, Long) =
-          if (p.timeNanos != 0) (p.timeNanos, p.timeNanos + p.durationNanos)
-          else (fromSec.map(_ * 1000000000L).getOrElse(0L),
-            untilSec.map(_ * 1000000000L).getOrElse(0L))
-        val passVals = passIdx.map(r.get)
-        acc.iterator.flatMap { case ((stackLf, sampleLabels), vals) =>
-          val stackId = xxh64Hex(stackLf.mkString(""))
-          val nameOut = fmtFrame(stackLf.head, spy)
-          val stackOut = stackLf.tail.map(fmtFrame(_, spy)).mkString("\n")
-          val labels = labelsJson(metaTags ++ sampleLabels ++ staticTags)
-          kept.zipWithIndex.flatMap { case ((_, stype, sunit, cfg), ki) =>
-            val v0 = vals(ki)
-            if (v0 == 0) None
-            else {
-              val scale = cfg.sampled && perNs != 0 && stype == "samples"
-              val v = if (scale) v0 * perNs else v0
-              val unit = if (scale) "nanoseconds" else sunit
-              val display =
-                if (cfg.displayName.nonEmpty) cfg.displayName else stype
-              val agg = cfg.aggregation match {
-                case "avg" => "avg"
-                case "sum" => "sum"
-                case _ => aggDefault
-              }
-              Some(Row.fromSeq(passVals ++ Seq(
-                nameOut, stackOut, stackId, spy, profileKind(display),
-                unit, display, agg, "CallStack", endNs - startNs,
-                profileID, labels,
-                // Locale.US pinned: the default-locale format would
-                // render a comma decimal separator on e.g. de_DE JVMs
-                String.format(java.util.Locale.US, "%.2f",
-                  java.lang.Double.valueOf(v.toDouble)),
-                if (startNs == 0) null
-                else new java.sql.Timestamp(startNs / 1000000L))))
+      // ---- emit (pprof.go:234-351) ---------------------------------
+      val (startNs, endNs): (Long, Long) =
+        if (p.timeNanos != 0) (p.timeNanos, p.timeNanos + p.durationNanos)
+        else (fromSec.map(_ * 1000000000L).getOrElse(0L),
+          untilSec.map(_ * 1000000000L).getOrElse(0L))
+      acc.iterator.flatMap { case ((stackLf, sampleLabels), vals) =>
+        val stackId = xxh64Hex(stackLf.mkString(""))
+        val nameOut = fmtFrame(stackLf.head, spy)
+        val stackOut = stackLf.tail.map(fmtFrame(_, spy)).mkString("\n")
+        val labels = labelsJson(metaTags ++ sampleLabels ++ staticTags)
+        kept.zipWithIndex.flatMap { case ((_, stype, sunit, cfg), ki) =>
+          val v0 = vals(ki)
+          if (v0 == 0) None
+          else {
+            val scale = cfg.sampled && perNs != 0 && stype == "samples"
+            val v = if (scale) v0 * perNs else v0
+            val unit = if (scale) "nanoseconds" else sunit
+            val display =
+              if (cfg.displayName.nonEmpty) cfg.displayName else stype
+            val agg = cfg.aggregation match {
+              case "avg" => "avg"
+              case "sum" => "sum"
+              case _ => aggDefault
             }
+            Some(Seq(
+              nameOut, stackOut, stackId, spy, profileKind(display),
+              unit, display, agg, "CallStack", endNs - startNs,
+              profileID, labels,
+              // Locale.US pinned: the default-locale format would
+              // render a comma decimal separator on e.g. de_DE JVMs
+              String.format(java.util.Locale.US, "%.2f",
+                java.lang.Double.valueOf(v.toDouble)),
+              if (startNs == 0) null
+              else new java.sql.Timestamp(startNs / 1000000L)))
           }
-        }.toSeq
-      } catch { case _: Exception => Nil } // hostile payload → drop
+        }
+      }.toSeq
+    }
   }
 
   // --- test-vector / fixture encoder ----------------------------------------
@@ -524,29 +518,16 @@ object PprofOps {
       samples.foreach(_.labels.foreach { case (k, v) => sid(k); sid(v) })
       periodType.foreach { case (t, u) => sid(t); sid(u) }
 
+      import BinaryDecoders.Encode.{strField, sub, varint, varintField}
       val out = new java.io.ByteArrayOutputStream()
-      def varint(o: java.io.ByteArrayOutputStream, v0: Long): Unit = {
-        var v = v0
-        while ((v & ~0x7fL) != 0) { o.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-        o.write(v.toInt)
-      }
-      def keyed(o: java.io.ByteArrayOutputStream, f: Int, w: Int): Unit =
-        varint(o, (f.toLong << 3) | w)
-      def sub(o: java.io.ByteArrayOutputStream, f: Int)(
-          b: java.io.ByteArrayOutputStream => Unit): Unit = {
-        val t = new java.io.ByteArrayOutputStream()
-        b(t)
-        keyed(o, f, 2); varint(o, t.size.toLong); t.writeTo(o)
-      }
-      def vint(o: java.io.ByteArrayOutputStream, f: Int, v: Long): Unit = {
-        keyed(o, f, 0); varint(o, v)
-      }
       def packed(o: java.io.ByteArrayOutputStream, f: Int,
           vs: Seq[Long]): Unit =
         if (vs.nonEmpty) sub(o, f)(t => vs.foreach(varint(t, _)))
       def vt(o: java.io.ByteArrayOutputStream, f: Int,
           t: (String, String)): Unit =
-        sub(o, f) { b => vint(b, 1, sid(t._1)); vint(b, 2, sid(t._2)) }
+        sub(o, f) { b =>
+          varintField(b, 1, sid(t._1)); varintField(b, 2, sid(t._2))
+        }
 
       sampleTypes.foreach(vt(out, 1, _))
       samples.foreach { s =>
@@ -554,29 +535,29 @@ object PprofOps {
           packed(b, 1, s.locIds)
           packed(b, 2, s.values)
           s.labels.foreach { case (k, v) =>
-            sub(b, 3) { lb => vint(lb, 1, sid(k)); vint(lb, 2, sid(v)) }
+            sub(b, 3) { lb =>
+              varintField(lb, 1, sid(k)); varintField(lb, 2, sid(v))
+            }
           }
         }
       }
       locations.foreach { l =>
         sub(out, 4) { b =>
-          vint(b, 1, l.id)
-          l.fnIds.foreach(fid => sub(b, 4)(ln => vint(ln, 1, fid)))
+          varintField(b, 1, l.id)
+          l.fnIds.foreach(fid => sub(b, 4)(ln => varintField(ln, 1, fid)))
         }
       }
       functions.foreach { f =>
         sub(out, 5) { b =>
-          vint(b, 1, f.id); vint(b, 2, sid(f.name)); vint(b, 4, sid(f.file))
+          varintField(b, 1, f.id); varintField(b, 2, sid(f.name))
+          varintField(b, 4, sid(f.file))
         }
       }
-      strings.keys.foreach { s =>
-        val bs = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        keyed(out, 6, 2); varint(out, bs.length.toLong); out.write(bs)
-      }
-      if (timeNanos != 0) vint(out, 9, timeNanos)
-      if (durationNanos != 0) vint(out, 10, durationNanos)
+      strings.keys.foreach(strField(out, 6, _))
+      if (timeNanos != 0) varintField(out, 9, timeNanos)
+      if (durationNanos != 0) varintField(out, 10, durationNanos)
       periodType.foreach(vt(out, 11, _))
-      if (period != 0) vint(out, 12, period)
+      if (period != 0) varintField(out, 12, period)
 
       val bytes = out.toByteArray
       if (!gzip) bytes

@@ -25,10 +25,6 @@ final case class FanOutWriter(
     table: String = "events_routed",
     numBuckets: Int = 32,
     bucketKeys: Seq[String] = Seq("conv_id"),
-    // extra constant partition columns (streaming: per-micro-batch id,
-    // so a REPLAYED batch overwrites only its own partitions while
-    // successive batches append)
-    extraPartCols: Seq[String] = Nil,
     // the COMPLETE routed-sink name set, when statically known (it
     // always is: the router's rule list names every sink). Non-empty ⇒
     // the candidate (sink, bucket) set is enumerated on the driver with
@@ -47,18 +43,19 @@ final case class FanOutWriter(
     * `runId`. `maxBuckets` artificially truncates the write (tests use it
     * to simulate a mid-run crash). Returns the number of buckets written.
     *
-    * `extraPartValues` gives THIS call's constant value for each
-    * `extraPartCols` column (streaming passes its micro-batch id):
-    * with them, lineage counts/hashes are computed from the durably
-    * WRITTEN files (partition-pruned to the attempted set) instead of
-    * re-executing the whole upstream pipeline a second time — at 100 TB
-    * the difference between one pass and two.
+    * `batchPartition` lists, in directory order, constant partition
+    * columns below (sink, bucket) and THIS call's value for each; the
+    * writer adds them to the data. Streaming passes its micro-batch id,
+    * so a REPLAYED batch overwrites only its own partitions while
+    * successive batches append.
     */
   def write(routed: DataFrame, runId: String,
       maxBuckets: Int = Int.MaxValue,
-      extraPartValues: Map[String, Any] = Map.empty): Int = {
+      batchPartition: Seq[(String, Any)] = Nil): Int = {
     val spark = routed.sparkSession
-    val data0 = bucketed(routed)
+    val data0 = bucketed(batchPartition.foldLeft(routed) {
+      case (df, (c, v)) => df.withColumn(c, lit(v))
+    })
     // A declared sink set is a CONTRACT: a routed row with an
     // undeclared sink would be silently dropped on resume and never
     // lineage-recorded, so fail the write loudly instead — the check
@@ -100,51 +97,41 @@ final case class FanOutWriter(
           concat_ws("|", col("__sink__"), col("__bucket__")).isin(keep: _*))
       }
 
-    val partCols = Seq("__sink__", "__bucket__") ++ extraPartCols
-
     // This run OWNS the attempted partition space: clear attempted
     // directories first (bounded driver-side deletes), because dynamic
     // partition overwrite only replaces partitions present in the data
     // — an attempted-but-now-empty partition would otherwise keep stale
     // rows from an earlier run (and poison the read-back lineage).
-    val partitionPathKnown = extraPartCols.forall(extraPartValues.contains)
-    if (partitionPathKnown)
-      io.deletePartitions(spark, table, allBuckets,
-        subdirs = extraPartCols.map(c =>
-          c -> String.valueOf(extraPartValues(c))))
+    io.deletePartitions(spark, table, allBuckets,
+      subdirs = batchPartition.map { case (c, v) => c -> String.valueOf(v) })
 
     // TableIO.overwritePartitions owns the one-shuffle-per-partition-key
     // clustering (each (sink, bucket) partition written by a single
     // task — without it, tasks × partitions small files; measured 3072
     // files for 96 partitions). maxRecordsPerFile still splits
     // oversized partitions (LogGroup batching parity).
-    io.overwritePartitions(pending, table, partCols)
+    io.overwritePartitions(pending, table,
+      Seq("__sink__", "__bucket__") ++ batchPartition.map(_._1))
     // Lineage from the WRITTEN table, not from the input plan: reading
     // back compressed parquet restricted to the attempted partitions
     // (OR-of-equalities -> partition pruning) is far cheaper than
-    // re-running parse/enrich/route. Falls back to the input plan only
-    // when extra partition columns exist whose values weren't declared
-    // (read-back could then mix in other batches' rows).
+    // re-running parse/enrich/route.
+    val attempted = allBuckets.map { case (s, b) =>
+      col("__sink__") === s && col("__bucket__") === b
+    }.reduce(_ || _)
+    val thisBatch = batchPartition.foldLeft(lit(true)) {
+      case (acc, (c, v)) => acc && col(c) === v
+    }
     // A fully-empty write leaves no parquet footers to infer a schema
     // from — fall back to the (empty) input plan so the zero-row
-    // lineage records still land.
+    // lineage records still land. Only that schema-inference failure is
+    // expected; any other read error must stay loud (a swallowed corrupt
+    // footer would silently record zero lineage).
     val lineageSource =
-      if (partitionPathKnown) {
-        val attempted = allBuckets.map { case (s, b) =>
-          col("__sink__") === s && col("__bucket__") === b
-        }.reduce(_ || _)
-        val extras = extraPartValues.foldLeft(lit(true)) {
-          case (acc, (c, v)) => acc && col(c) === v
-        }
-        // only the empty-write schema-inference failure is expected;
-        // any other read error must stay loud (a swallowed corrupt
-        // footer would silently record zero lineage)
-        try io.read(spark, table).where(attempted && extras)
-        catch {
-          case _: org.apache.spark.sql.AnalysisException =>
-            pending.limit(0)
-        }
-      } else pending
+      try io.read(spark, table).where(attempted && thisBatch)
+      catch {
+        case _: org.apache.spark.sql.AnalysisException => pending.limit(0)
+      }
     // attempted-but-empty partitions get zero-row lineage so resume
     // marks them complete instead of re-attempting forever
     Lineage.record(io, runId, lineageSource, expected = allBuckets)

@@ -60,9 +60,9 @@ object Lineage {
       expected: Seq[(String, Int)] = Nil): Unit = {
     val spark = written.sparkSession
     // Canonicalize before hashing — SORTED column names, values cast to
-    // string — so the hash is SOURCE-INDEPENDENT: the main path hashes
-    // the read-back parquet while fallback paths (empty write, undeclared
-    // extra partitions) hash the input plan, and the two differ in column
+    // string — so the hash is SOURCE-INDEPENDENT: the fan-out writer
+    // hashes the read-back parquet, other callers (and the writer's
+    // empty-write fallback) hash a plan, and the two differ in column
     // order and in partition-column types (a long __batch__ in the plan
     // is inferred int on read-back). Identical content must hash equal
     // through either path or cross-run equality evidence is useless.

@@ -35,14 +35,13 @@ object StreamingRunner {
       checkpoint: Option[String] = None,
       spec: PipelineConfig.Spec = TranscriptPipeline.spec)
       : DataStreamWriter[Row] = {
-    val writer = spec.writer(io, extraPartCols = Seq("__batch__"))
+    val writer = spec.writer(io)
     val w = spec(stream).writeStream
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writer.write(batch.withColumn("__batch__", lit(batchId)),
-          s"$runPrefix-$batchId",
-          extraPartValues = Map("__batch__" -> batchId)): Unit
+        writer.write(batch, s"$runPrefix-$batchId",
+          batchPartition = Seq("__batch__" -> batchId)): Unit
       }
     checkpoint.fold(w)(c => w.option("checkpointLocation", c))
   }

@@ -272,6 +272,19 @@ class DatasetOpsSpec extends AnyFunSuite {
     assert(out(2).isNullAt(2) && out(2).isNullAt(5))
   }
 
+  test("multimodal decode is total: a payload the decoder throws on keeps its row with null decode columns") {
+    val d = Seq((1L, "payload-one"), (2L, "bad"), (3L, "payload-three"))
+      .toDF("doc_id", "s")
+      .select(col("doc_id"), col("s").cast("binary").as("payload"))
+    val out = MultimodalOps.decode(d.coalesce(1), "payload",
+      decoder = ThrowsOnBad, batchSize = 3).orderBy("doc_id").collect()
+    val expected = MultimodalOps.decode(d, "payload")
+      .orderBy("doc_id").collect()
+    assert(out.length == 3)
+    assert(out(0) == expected(0) && out(2) == expected(2))
+    assert((2 to 5).forall(out(1).isNullAt))
+  }
+
   test("frame sample: every stride-th frame, n>=1 guard") {
     val d = Seq((1L, 7), (2L, 1)).toDF("doc_id", "n_frames")
     val out = MultimodalOps.sampleFrames(d, "n_frames", 3)
@@ -747,5 +760,15 @@ class DatasetOpsSpec extends AnyFunSuite {
       val s = p.queryExecution.optimizedPlan.toString
       assert(!s.contains("UDF"), s"plan contains UDF:\n$s")
     }
+  }
+}
+
+/** A batch decoder that rejects the whole batch when any payload is
+  * "bad" — the shape of a real media decoder failing on one input. */
+private object ThrowsOnBad extends MultimodalOps.Decoder {
+  def decodeBatch(payloads: Seq[Array[Byte]]): Seq[MultimodalOps.Decoded] = {
+    if (payloads.exists(p => new String(p, "UTF-8") == "bad"))
+      throw new IllegalArgumentException("undecodable payload")
+    MultimodalOps.Md5FakeDecoder.decodeBatch(payloads)
   }
 }

@@ -45,9 +45,8 @@ class FanOutWriteWidthSpec extends AnyFunSuite {
 
   /** 3 sinks × 8 buckets, one `__batch__` directory per micro-batch. */
   private def write(io: TableIO, df: DataFrame, batch: Long): Int =
-    FanOutWriter(io, numBuckets = 8, sinks = sinks,
-      extraPartCols = Seq("__batch__"))
-      .write(df, s"run-$batch", extraPartValues = Map("__batch__" -> batch))
+    FanOutWriter(io, numBuckets = 8, sinks = sinks)
+      .write(df, s"run-$batch", batchPartition = Seq("__batch__" -> batch))
 
   private def fingerprint(dir: String): (Long, Long) = {
     val back = spark.read.parquet(s"$dir/events_routed")
