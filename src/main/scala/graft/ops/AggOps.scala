@@ -328,13 +328,6 @@ object AggOps {
       flushWithState(st)._1
   }
 
-  /** Time-window counts via `window()` (streaming-compatible shape). */
-  def windowCounts(df: DataFrame, duration: String = "5 minutes"): DataFrame =
-    df.groupBy(window(col("ts"), duration), col("tool"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("tool"), col("n"))
-
   /** Open-chunk carry-over of [[MultilineFsm]] — top-level so streaming
     * state Encoders work (no path-dependent inner types). */
   final case class MultilineState(idxs: Seq[Long], txts: Seq[String],

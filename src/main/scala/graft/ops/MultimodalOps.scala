@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -107,9 +107,4 @@ object MultimodalOps {
     df.withColumn("frame_idx",
       explode(sequence(lit(0), greatest(col(nFramesCol) - 1, lit(0)),
         lit(stride))))
-
-  /** "Resize" stub: scales the fake feature vector — stands in for the
-    * geometry-changing transform of a real resize kernel. */
-  def resizeFeatures(featuresCol: Column, scale: Double): Column =
-    transform(featuresCol, x => round(x * scale, 6))
 }

@@ -55,23 +55,6 @@ object ParseOps {
     }
   }
 
-  /** Unanchored variant (Go `processor_regex` with `FullMatch=false`,
-    * `plugins/processor/regex/regex.go:35`). */
-  final case class RegexSearchParser(
-      sourceKey: String,
-      regex: String,
-      keys: Seq[String],
-      opts: ParserOptions = ParserOptions()) {
-    def apply(df: DataFrame): DataFrame = {
-      val src = col(sourceKey)
-      val ok = src.isNotNull && src.rlike(regex)
-      val fields = keys.zipWithIndex.map { case (k, i) =>
-        k -> regexp_extract(src, regex, i + 1)
-      }
-      opts.finish(df, sourceKey, ok, fields)
-    }
-  }
-
   /** JSON expand of one field into string-typed keys.
     *
     * Reference: `core/plugin/processor/ProcessorParseJsonNative.cpp`

@@ -51,13 +51,9 @@ object LogFiles {
       .select(col(sourceCol), col("line_no").cast("int"), col("text"))
   }
 
-  /** JSON-lines / CSV convenience readers with source tagging (the
-    * reference's Go file input supports these via processors; Spark
-    * reads them natively with full pushdown). */
-  def jsonLines(spark: SparkSession, glob: String,
-      sourceCol: String = "__source__"): DataFrame =
-    spark.read.json(glob).withColumn(sourceCol, col("_metadata.file_path"))
-
+  /** CSV convenience reader with source tagging (the reference's Go
+    * file input supports this via processors; Spark reads it natively
+    * with full pushdown). */
   def csv(spark: SparkSession, glob: String, header: Boolean = true,
       sourceCol: String = "__source__"): DataFrame =
     spark.read.option("header", header.toString).csv(glob)

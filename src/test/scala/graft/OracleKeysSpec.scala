@@ -15,5 +15,9 @@ class OracleKeysSpec extends AnyFunSuite {
     // raw AES ciphertext has no DuckDB equivalent; encrypt_roundtrip is
     // its hash-verified companion
     assert(queries -- oracle == Set("encrypt_field"))
+    // building a Map keeps only the last record of a repeated name
+    val names = (SparkEntry.records ++ graft.queries.CurationQueries.bench).map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      s"query names declared twice: ${names.diff(names.distinct)}")
   }
 }

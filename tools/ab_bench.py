@@ -2,10 +2,14 @@
 
     python3 tools/ab_bench.py --base HEAD~1 --workload stream_backlog --pairs 10
 
-Extracts <rev> into a temporary directory under $TMPDIR (`git archive`:
-the copy has no .git, and a killed run leaves nothing registered in this
-repository), then runs BENCHMARK.json's command with `--workload W --seed i
---seconds <run_seconds> --trace 0` in both trees for seeds first-seed ..
+Materializes both sides as sibling directories under one temporary parent
+in $TMPDIR: `base/` holds the files of <rev> (`git archive`), `change/` a
+snapshot of the working tree (every tracked or untracked, not ignored file,
+uncommitted edits included). Neither copy has a .git, so a killed run leaves
+nothing registered in this repository, and each side builds its own
+.bench_build and class-data-sharing archive from the same empty start. It
+then runs BENCHMARK.json's command with `--workload W --seed i --seconds
+<run_seconds> --trace 0` in both trees for seeds first-seed ..
 first-seed+pairs-1. The side that goes first swaps on every pair, so load
 drifts on a shared host fall on both sides alike. Extra arguments
 (--convs, --files, ...) are passed through to run.py.
@@ -14,7 +18,7 @@ For each end-to-end metric of BENCHMARK.json it prints the base median
 [q1, q3], the change median [q1, q3], the relative change of the medians
 and the pairs the change won (strictly better, by the metric's "better"
 direction). Exits 1 if any run exits non-zero or reports correct: false;
-the temporary tree is removed either way.
+the temporary trees are removed either way.
 """
 
 import argparse
@@ -45,6 +49,17 @@ def extract(rev, dest):
     if archive.wait() != 0 or untar.returncode != 0:
         raise RunError(f"could not extract {rev}")
     return sha
+
+
+def snapshot(dest):
+    """Copy the working tree's tracked and untracked, not ignored files to `dest`."""
+    files = subprocess.run(["git", "-C", ROOT, "ls-files", "-z", "-co", "--exclude-standard"],
+                           check=True, capture_output=True).stdout.split(b"\0")
+    for rel in filter(None, (f.decode() for f in files)):
+        src = os.path.join(ROOT, rel)
+        if os.path.isfile(src):  # a deleted, not yet staged file is still listed
+            os.makedirs(os.path.dirname(os.path.join(dest, rel)), exist_ok=True)
+            shutil.copy2(src, os.path.join(dest, rel))
 
 
 def run_once(bench, tree, workload, seed, extra):
@@ -109,20 +124,18 @@ def main(argv):
     metrics = bench["end_to_end"]
 
     tmp = tempfile.mkdtemp(prefix="ab_bench-")
+    base_tree, change_tree = os.path.join(tmp, "base"), os.path.join(tmp, "change")
     base, change = [], []
     try:
-        sha = extract(args.base, tmp)
-        print(f"[ab_bench] base {sha[:12]} in {tmp}; change = working tree {ROOT}",
-              file=sys.stderr)
-        # run.py maps a class-data-sharing archive that the first run after a
-        # build writes. The extracted tree has none; drop the working tree's
-        # too, so both sides archive this workload's classes
-        archive = os.path.join(ROOT, ".bench_build", "perfbench", "classes.jsa")
-        if os.path.exists(archive):
-            os.remove(archive)
+        os.makedirs(base_tree)
+        os.makedirs(change_tree)
+        sha = extract(args.base, base_tree)
+        snapshot(change_tree)
+        print(f"[ab_bench] base {sha[:12]} in {base_tree}; "
+              f"change = working tree {ROOT} copied to {change_tree}", file=sys.stderr)
         for i in range(args.pairs):
             seed = args.first_seed + i
-            sides = [("base", tmp, base), ("change", ROOT, change)]
+            sides = [("base", base_tree, base), ("change", change_tree, change)]
             if i % 2:
                 sides.reverse()
             got = {}
