@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import scala.jdk.CollectionConverters._
 import graft.ops._
-import graft.pipeline.TranscriptPipeline
+import graft.pipeline.{CurationPipeline, TranscriptPipeline}
 import graft.sink.{FanOutWriter, StageMetrics, TableIO}
 
 /** Config-driven pipeline builder — the Spark analog of the reference's
@@ -39,7 +39,8 @@ import graft.sink.{FanOutWriter, StageMetrics, TableIO}
   * (config parsing happens at plan-build time, never per row). A parsed
   * [[Spec]] with a `sink:` section runs end to end through
   * [[graft.run.PipelineRunner.run]], the same runner as the built-in
-  * [[graft.pipeline.TranscriptPipeline.spec]].
+  * [[graft.pipeline.TranscriptPipeline.spec]] and
+  * [[graft.pipeline.CurationPipeline.spec]].
   */
 object PipelineConfig {
 
@@ -72,6 +73,10 @@ object PipelineConfig {
   val registry: Map[String, JsonNode => Stage] = Map(
     // the north-star multi-format parse (nginx/json/kv/csv/raw, `fmt`)
     "parse_transcript" -> { _ => TranscriptPipeline.parse _ },
+    // the curation chain's stages (`doc_id` / `text` documents)
+    "quality_gate" -> { _ => CurationPipeline.qualityGate _ },
+    "exact_dedup" -> { _ => CurationPipeline.exactDedup _ },
+    "near_dedup" -> { _ => CurationPipeline.nearDedup _ },
     "parse_regex" -> { n =>
       ParseOps.RegexParser(str(n, "sourceKey"), str(n, "regex"),
         strs(n, "keys"),
@@ -590,7 +595,7 @@ object PipelineConfig {
 
     /** The resumable fan-out writer the `sink` section describes (its
       * table, bucket keys and count) over [[declaredSinks]] — the one
-      * writer both runners use. */
+      * writer the batch and streaming runners use. */
     def writer(io: TableIO): FanOutWriter = {
       val s = sink.getOrElse(throw new IllegalArgumentException(
         "pipeline spec has no 'sink' section"))

@@ -17,12 +17,9 @@ object AggOps {
     * buckets (not `window()`) keep the output schema flat for
     * cross-engine verification; the streaming runner uses `window()`.
     */
-  def sinkAggregates(
-      df: DataFrame,
-      sinkCol: String = "__sink__",
-      bucket: String = "hour"): DataFrame =
+  def sinkAggregates(df: DataFrame, bucket: String = "hour"): DataFrame =
     df.groupBy(
-        col(sinkCol),
+        col("__sink__"),
         col("tool"),
         date_trunc(bucket, col("ts")).as("bucket"))
       .agg(

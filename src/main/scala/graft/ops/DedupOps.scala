@@ -204,13 +204,9 @@ object DedupOps {
     * Every generation is lineage-truncated with an eager
     * `localCheckpoint` (the iterative join otherwise grows the logical
     * plan exponentially through the pointer-jump self-join), and no
-    * generation is ever `unpersist()`ed — see the loop comments.
-    * `checkpointEvery` is retained for source compatibility and
-    * ignored. */
+    * generation is ever `unpersist()`ed — see the loop comments. */
   def resolveDuplicatesDetailed(pairs: DataFrame, aCol: String = "doc_a",
-      bCol: String = "doc_b", maxIter: Int = 10,
-      checkpointEvery: Int = 5): (DataFrame, Boolean) = {
-    val _ = checkpointEvery
+      bCol: String = "doc_b", maxIter: Int = 10): (DataFrame, Boolean) = {
     val edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .distinct().cache()
     // every labels generation is an EAGER localCheckpoint, so each is

@@ -115,11 +115,6 @@ object PyroscopeOps {
           .otherwise(t)
       }
 
-    // absent query param = missing COLUMN reading as all-null —
-    // Cols.optCol, shared with the OTLP/flusher encoders
-    private def optCol(df: DataFrame, name: String): Column =
-      Cols.optCol(df, name)
-
     def apply(df: DataFrame): DataFrame = {
       val paramCols = Seq(bodyKey, nameKey, fromKey, untilKey,
         sampleRateKey, spyNameKey, unitsKey, aggTypeKey)
@@ -129,7 +124,8 @@ object PyroscopeOps {
       // ---- stage 1: per-request metadata (materialized once via an
       // intermediate select so the per-line lambdas below reference
       // bound attributes, not re-evaluated trees) -----------------------
-      val nameRaw = optCol(df, nameKey)
+      // an absent query param is a missing column reading as all-null
+      val nameRaw = Cols.optCol(df, nameKey)
       val base = trim(regexp_extract(nameRaw, "^([^\\{]*)", 1))
       val braceStr = regexp_extract(nameRaw, "\\{(.*)\\}", 1)
       val braceEnts = transform(
@@ -142,18 +138,18 @@ object PyroscopeOps {
       val finalName = Cols.let(base)(b =>
         when(b.endsWith(".cpu"), substring(b, lit(1), length(b) - 4))
           .otherwise(b))
-      val spyRaw = coalesce(optCol(df, spyNameKey), lit(""))
+      val spyRaw = coalesce(Cols.optCol(df, spyNameKey), lit(""))
       val spy = when(spyRaw === "", "unknown").otherwise(
         regexp_replace(regexp_replace(spyRaw, "^pyroscope-", ""),
           "spy$", ""))
-      val unitsRaw = coalesce(optCol(df, unitsKey), lit(""))
+      val unitsRaw = coalesce(Cols.optCol(df, unitsKey), lit(""))
       val units0 = when(unitsRaw === "", "samples").otherwise(unitsRaw)
-      val aggRaw = coalesce(optCol(df, aggTypeKey), lit(""))
+      val aggRaw = coalesce(Cols.optCol(df, aggTypeKey), lit(""))
       val agg = when(aggRaw === "", "sum").otherwise(aggRaw)
-      val rate = coalesce(optCol(df, sampleRateKey).try_cast("long"),
+      val rate = coalesce(Cols.optCol(df, sampleRateKey).try_cast("long"),
         lit(100L))
-      val fromSec = optCol(df, fromKey).try_cast("long")
-      val untilSec = optCol(df, untilKey).try_cast("long")
+      val fromSec = Cols.optCol(df, fromKey).try_cast("long")
+      val untilSec = Cols.optCol(df, untilKey).try_cast("long")
 
       val meta = df
         .where(nameRaw.isNotNull && trim(nameRaw) =!= "")

@@ -32,8 +32,7 @@ object RouteOps {
       sourceKey: String,
       rules: Seq[Rule],
       defaultSink: String = "default",
-      dropDisMatch: Boolean = false,
-      sinkCol: String = "__sink__") {
+      dropDisMatch: Boolean = false) {
 
     def routingColumn: Column = {
       val src = col(sourceKey)
@@ -45,8 +44,8 @@ object RouteOps {
     }
 
     def apply(df: DataFrame): DataFrame = {
-      val routed = df.withColumn(sinkCol, routingColumn)
-      if (dropDisMatch) routed.filter(col(sinkCol).isNotNull) else routed
+      val routed = df.withColumn("__sink__", routingColumn)
+      if (dropDisMatch) routed.filter(col("__sink__").isNotNull) else routed
     }
 
     /** The per-sink split (for sink-specific TEST pipelines). CACHES the
@@ -58,7 +57,7 @@ object RouteOps {
     def split(df: DataFrame): Map[String, DataFrame] = {
       val routed = apply(df).cache()
       val sinks = rules.map(_.sink) ++ (if (dropDisMatch) Nil else Seq(defaultSink))
-      sinks.distinct.map(s => s -> routed.filter(col(sinkCol) === s)).toMap
+      sinks.distinct.map(s => s -> routed.filter(col("__sink__") === s)).toMap
     }
   }
 
@@ -78,7 +77,7 @@ object RouteOps {
     * resulting column is the fan-out writer's partition column, so
     * dynamic topics ride the existing single-pass partitioned write.
     */
-  final case class TopicTemplate(pattern: String, sinkCol: String = "__sink__") {
+  final case class TopicTemplate(pattern: String) {
     require(pattern.nonEmpty, "empty topic pattern")
 
     /** (literal-before, key) pairs + trailing literal. The reference
@@ -117,7 +116,7 @@ object RouteOps {
     }
 
     def apply(df: DataFrame): DataFrame =
-      df.withColumn(sinkCol, column(df))
+      df.withColumn("__sink__", column(df))
   }
 
   /** C++ multicast router: each sink has a Column condition; every
@@ -142,13 +141,13 @@ object RouteOps {
       }.toMap
 
     /** Single-pass variant: explode the matched-sink array so one write
-      * with partitionBy(sinkCol) covers all sinks (duplicate rows for
+      * with partitionBy(__sink__) covers all sinks (duplicate rows for
       * multi-match, exactly the reference's copy semantics). */
-    def explodeSinks(df: DataFrame, sinkCol: String = "__sink__"): DataFrame = {
+    def explodeSinks(df: DataFrame): DataFrame = {
       val arr = array(conditions.map { case (s, c) =>
         when(c, lit(s)).otherwise(lit(null: String))
       }: _*)
-      df.withColumn(sinkCol, explode(filter(arr, _.isNotNull)))
+      df.withColumn("__sink__", explode(filter(arr, _.isNotNull)))
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.config.PipelineConfig
+import graft.functions.Cols
 import graft.ops._
 
 /** The north-star composed pipeline: collect → parse → enrich → route →
@@ -43,21 +44,15 @@ object TranscriptPipeline {
 
     // ONE evaluation per format per row, materialized in a dedicated
     // projection (multi-use non-cheap aliases are not collapsed):
-    //  - nginx: one regexp_replace packs all 10 groups, one split unpacks
-    //    (vs 10 regexp_extract = 10 full regex matches);
+    //  - nginx: Cols.packGroups — one regexp_replace packs all 10
+    //    groups, one split unpacks (vs 10 regexp_extract = 10 full regex
+    //    matches; \u0001-bearing lines fall back to per-group extraction);
     //  - json: one from_json to map<string,string> (vs get_json_object
     //    per field = one JSON parse per field);
     //  - kv: one str_to_map.
-    val repl = (1 to nginxKeys.size).map("$" + _).mkString("\u0001")
-    // \u0001-bearing lines (would shift the packed split) fall back to
-    // per-group extraction -- rare, keeps the fast path exact.
     val staged = df
       .withColumn("__nginx__",
-        when(isNginx,
-          when(!t.contains("\u0001"),
-            split(regexp_replace(t, anchored, repl), "\u0001", -1))
-          .otherwise(array(nginxKeys.indices.map(i =>
-            regexp_extract(t, anchored, i + 1)): _*))))
+        when(isNginx, Cols.packGroups(t, anchored, nginxKeys.size)))
       .withColumn("__json__",
         when(t.rlike("^\\s*\\{"), from_json(t, "map<string,string>",
           Map.empty[String, String])))

@@ -322,8 +322,8 @@ object CurationQueries {
           s"list_min(list_transform(bh, h -> (h * $a + $b) % 4294967296))"
         }.mkString(", ")))) { (s, dir) =>
       // the full curation chain: gate → exact dedup → LSH near-dup →
-      // cluster resolution → survivor set (graft.run.CurationPipeline)
-      graft.run.CurationPipeline.survivors(tbl(s, dir, "documents"))._1
+      // cluster resolution → survivor set (graft.pipeline.CurationPipeline)
+      graft.pipeline.CurationPipeline.survivors(tbl(s, dir, "documents"))
         .select(col("doc_id"),
           md5(col("text").cast("binary")).as("text_md5"))
     },

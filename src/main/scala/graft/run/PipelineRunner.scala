@@ -6,11 +6,13 @@ import graft.ops.AggOps
 import graft.pipeline.TranscriptPipeline
 import graft.sink.{Metrics, TableIO}
 
-/** Batch job entry: any pipeline spec — by default the north-star
-  * transcripts → parse → enrich → route — then resumable fan-out write
-  * → per-sink aggregates → self-metrics, as one run. The spec's `sink`
-  * section names the table, its bucket keys and count, and the
-  * aggregate time bucket.
+/** The one batch runner: any pipeline spec — by default the north-star
+  * transcripts → parse → enrich → route, or the curation chain
+  * ([[graft.pipeline.CurationPipeline.spec]]) — then resumable fan-out
+  * write → per-sink aggregates → self-metrics, as one run. The spec's
+  * `sink` section names the table, its bucket keys and count, and the
+  * aggregate time bucket (no aggregates without one). `_metrics`
+  * `n_events` per sink is the row count the run left in that sink.
   *
   * Resume contract: `run(runId)` may be invoked any number of times
   * after any partial failure; completed (sink, bucket) partitions are

@@ -17,7 +17,8 @@ import graft.sources.Transcripts
   * `pipelineConfig` is the local path of a YAML/JSON [[PipelineConfig]]
   * file with a `sink:` section; without it the job runs
   * [[TranscriptPipeline.spec]] (`examples/transcript_pipeline.yaml` is
-  * the same pipeline as a file).
+  * the same pipeline as a file). `examples/curation_pipeline.yaml` runs
+  * the curation job over a `(doc_id, text)` documents parquet.
   *
   * The same invocation works on a real cluster (`--master yarn/k8s`,
   * any executor count) and on local[N] — the job carries no

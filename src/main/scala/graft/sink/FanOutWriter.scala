@@ -68,10 +68,7 @@ final case class FanOutWriter(
             lit("routed sink not in FanOutWriter.sinks: "),
             col("__sink__")))))
 
-    // lineage is tiny (sinks × buckets rows) — driver-side set is bounded
-    val done: Set[(String, Int)] = Lineage
-      .completed(spark, io, runId).collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
+    val done = Lineage.completed(spark, io, runId)
 
     // Candidate partitions: statically sinks × numBuckets (no data
     // scan); the distinct() pass over the data is only the fallback when

@@ -33,17 +33,15 @@ object Lineage {
 
   val table = "_lineage"
 
-  /** Buckets already completed for `runId` per sink. */
-  def completed(spark: SparkSession, io: TableIO, runId: String): DataFrame = {
-    if (!io.exists(spark, table))
-      return spark.emptyDataFrame
-        .withColumn("sink", lit(""))
-        .withColumn("bucket", lit(0))
-        .limit(0)
-    io.read(spark, table)
+  /** (sink, bucket) partitions already completed for `runId` — tiny
+    * (≤ sinks × buckets), so collected to the driver. */
+  def completed(spark: SparkSession, io: TableIO,
+      runId: String): Set[(String, Int)] =
+    if (!io.exists(spark, table)) Set.empty
+    else io.read(spark, table)
       .where(col("run_id") === runId)
-      .select("sink", "bucket").distinct()
-  }
+      .select("sink", "bucket").distinct().collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSet
 
   /** Deterministic pack id for a (run, sink, bucket) coordinate. */
   def packId(runId: String): org.apache.spark.sql.Column =
@@ -56,7 +54,6 @@ object Lineage {
     * attempted coordinates with no data still get a zero-row lineage
     * record so a resume sees them as complete. */
   def record(io: TableIO, runId: String, written: DataFrame,
-      sinkCol: String = "__sink__", bucketCol: String = "__bucket__",
       expected: Seq[(String, Int)] = Nil): Unit = {
     val spark = written.sparkSession
     // Canonicalize before hashing — SORTED column names, values cast to
@@ -66,10 +63,11 @@ object Lineage {
     // order and in partition-column types (a long __batch__ in the plan
     // is inferred int on read-back). Identical content must hash equal
     // through either path or cross-run equality evidence is useless.
-    val allCols = written.columns.filterNot(c => c == sinkCol || c == bucketCol)
+    val allCols = written.columns
+      .filterNot(c => c == "__sink__" || c == "__bucket__")
       .sorted.map(c => col(c).cast("string"))
     val grouped = written
-      .select(col(sinkCol).as("sink"), col(bucketCol).as("bucket"),
+      .select(col("__sink__").as("sink"), col("__bucket__").as("bucket"),
         xxhash64(allCols: _*).as("__h__"))
       .groupBy("sink", "bucket")
       // bit_xor: order-independent and overflow-free under ANSI mode

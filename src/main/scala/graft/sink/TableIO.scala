@@ -91,12 +91,11 @@ final case class TableIO(root: String,
     * the writer produced even for special characters. */
   def deletePartitions(spark: SparkSession, table: String,
       pairs: Seq[(String, Int)],
-      sinkCol: String = "__sink__", bucketCol: String = "__bucket__",
       subdirs: Seq[(String, String)] = Nil): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val conf = spark.sparkContext.hadoopConfiguration
     pairs.foreach { case (s, b) =>
-      val parts = Seq(s"$sinkCol=${escapePathName(s)}", s"$bucketCol=$b") ++
+      val parts = Seq(s"__sink__=${escapePathName(s)}", s"__bucket__=$b") ++
         subdirs.map { case (c, v) => s"$c=${escapePathName(v)}" }
       val target = new org.apache.hadoop.fs.Path(
         (path(table) +: parts).mkString("/"))

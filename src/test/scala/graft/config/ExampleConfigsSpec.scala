@@ -2,6 +2,7 @@ package graft.config
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.monotonically_increasing_id
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.sources.Transcripts
@@ -19,7 +20,9 @@ class ExampleConfigsSpec extends AnyFunSuite {
   }
 
   test("all example YAMLs parse and execute over transcripts") {
+    // doc_id: the curation stages key documents by it
     val input = Transcripts.generate(spark, 40, seed = 9)
+      .withColumn("doc_id", monotonically_increasing_id())
     assert(exampleFiles.nonEmpty)
     exampleFiles.foreach { f =>
       val spec = PipelineConfig.parse(Files.readString(f))

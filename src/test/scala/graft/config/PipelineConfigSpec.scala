@@ -133,6 +133,10 @@ class PipelineConfigSpec extends AnyFunSuite {
       // one doc out per row in
       "decontaminate" -> """{"type":"decontaminate","idField":"rowid","textField":"text","probes":["zz yy xx ww vv uu tt ss"]}""",
       "paragraph_dedup" -> """{"type":"paragraph_dedup","idField":"rowid","textField":"text"}""",
+      // the curation stages drop rows by design (harness asserts ≤ n)
+      "quality_gate" -> """{"type":"quality_gate"}""",
+      "exact_dedup" -> """{"type":"exact_dedup"}""",
+      "near_dedup" -> """{"type":"near_dedup"}""",
       "cloud_meta" -> """{"type":"cloud_meta","tags":{"__cloud_region__":"cn-test","__host__":"h0"}}""",
       // one all-covering range → left join keeps exactly one match per row
       "range_lookup" -> """{"type":"range_lookup","sourceKey":"turn_idx","ranges":[{"lo":0,"hi":1000000,"tier":"all"}]}""",
@@ -191,10 +195,13 @@ class PipelineConfigSpec extends AnyFunSuite {
           durationNanos = 1000000000L)))
       .withColumn("rowid",
         org.apache.spark.sql.functions.monotonically_increasing_id())
+      .withColumn("doc_id", org.apache.spark.sql.functions.col("rowid"))
     val n = base.count()
+    val dropping = Set("quality_gate", "exact_dedup", "near_dedup")
     minimal.foreach { case (t, cfg) =>
       val out = PipelineConfig.parse(s"""{"processors":[$cfg]}""")(base)
-      assert(out.count() == n, s"type $t lost rows")
+      if (dropping(t)) assert(out.count() <= n, s"type $t gained rows")
+      else assert(out.count() == n, s"type $t lost rows")
     }
   }
 

@@ -370,13 +370,9 @@ class DatasetOpsSpec extends AnyFunSuite {
     assert(!convNo)
     // labels still moving: the chain is split across several comp values
     assert(partial.select("comp").distinct().count() > 1)
-    // O(log d) iterations → converged, one component, survivor = min
-    // id. checkpointEvery=3: the chain converges around iteration 8
-    // (reach doubles per round), so every-3 crosses two checkpoint
-    // boundaries and the lineage-truncation path is exercised twice
+    // O(log d) iterations → converged, one component, survivor = min id
     val (full, convYes) =
-      DedupOps.resolveDuplicatesDetailed(chain, maxIter = 12,
-        checkpointEvery = 3)
+      DedupOps.resolveDuplicatesDetailed(chain, maxIter = 12)
     assert(convYes)
     val rows = full.collect().map(x =>
       x.getLong(0) -> (x.getLong(1), x.getBoolean(2))).toMap

@@ -1,14 +1,19 @@
 package graft.run
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.config.PipelineConfig
+import graft.ops.DedupOps
+import graft.pipeline.CurationPipeline
 import graft.sink.TableIO
 
 /** End-to-end curation: gate → exact dedup → near-dup resolution →
-  * resumable survivor write. Fixture corpus has one planted instance of
-  * every elimination path, so the survivor set pins each stage. */
+  * resumable survivor write, run by [[PipelineRunner]]. Fixture corpus
+  * has one planted instance of every elimination path, so the survivor
+  * set pins each stage. */
 class CurationResumeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -37,16 +42,27 @@ class CurationResumeSpec extends AnyFunSuite {
     (base ++ exactDup ++ nearDup ++ lowQuality).toDF("doc_id", "text")
   }
 
+  /** Whether the resolver converges, within the pipeline's `maxIter`,
+    * on the near-dup candidate pairs of `docs` after `stages`. */
+  private def resolverConverges(docs: DataFrame,
+      stages: Seq[PipelineConfig.Stage]): Boolean = {
+    val pairs = CurationPipeline.minHash
+      .pairs(stages.foldLeft(docs)((d, s) => s(d)))
+    DedupOps.resolveDuplicatesDetailed(pairs,
+      maxIter = CurationPipeline.maxIter)._2
+  }
+
   test("survivor set eliminates exactly the planted losers") {
-    val (surv, converged) = CurationPipeline.survivors(corpus)
-    assert(converged)
+    val surv = CurationPipeline.survivors(corpus)
+    assert(resolverConverges(corpus,
+      Seq(CurationPipeline.qualityGate _, CurationPipeline.exactDedup _)))
     val ids = surv.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == ((1 to 20).map(_.toLong).toSet + 21L + 31L))
     // 22 exact-dup loser; 32/33 near-dup losers; 41/42/43 gated
   }
 
   test("near-dup chain resolves to ONE component (transitivity, not just pairs)") {
-    val pairs = CurationPipeline.Config().minhash
+    val pairs = CurationPipeline.minHash
       .pairs(CurationPipeline.qualityGate(corpus))
     val ab = pairs.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -58,15 +74,18 @@ class CurationResumeSpec extends AnyFunSuite {
   test("kill mid-write, rerun same runId: identical survivors, no dup rows") {
     val dirA = Files.createTempDirectory("graft-cur").toString
     val dirB = Files.createTempDirectory("graft-cur").toString
-    val clean = CurationPipeline.run(corpus, TableIO(dirA), "cur-clean",
-      numBuckets = 8)
-    assert(clean.bucketsWritten == 8 && clean.converged)
+    val spec = CurationPipeline.spec.copy(
+      sink = CurationPipeline.spec.sink.map(_.copy(numBuckets = 8)))
+    def run(dir: String, runId: String, maxBuckets: Int = Int.MaxValue) =
+      PipelineRunner.run(corpus, TableIO(dir), runId, maxBuckets, spec)
+    val clean = run(dirA, "cur-clean")
+    assert(clean.bucketsWritten == 8 && clean.complete)
+    assert(resolverConverges(corpus,
+      Seq(CurationPipeline.qualityGate _, CurationPipeline.exactDedup _)))
     // crash after 3 of 8 buckets
-    val crash = CurationPipeline.run(corpus, TableIO(dirB), "cur-crash",
-      numBuckets = 8, maxBuckets = 3)
+    val crash = run(dirB, "cur-crash", maxBuckets = 3)
     assert(crash.bucketsWritten == 3)
-    val resume = CurationPipeline.run(corpus, TableIO(dirB), "cur-crash",
-      numBuckets = 8)
+    val resume = run(dirB, "cur-crash")
     assert(resume.bucketsWritten == 5) // only the missing buckets
     def fingerprint(dir: String) = {
       val back = spark.read.parquet(s"$dir/documents_curated")
@@ -77,14 +96,18 @@ class CurationResumeSpec extends AnyFunSuite {
     }
     assert(fingerprint(dirA) == fingerprint(dirB))
     // survivor identity matches the direct computation
-    val direct = CurationPipeline.survivors(corpus)._1
+    val direct = CurationPipeline.survivors(corpus)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val back = spark.read.parquet(s"$dirB/documents_curated")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(back == direct)
+    // the runner's self-metrics count exactly the curated rows
+    val nEvents = spark.read.parquet(s"$dirB/_metrics")
+      .where(col("run_id") === "cur-crash" && col("sink") === "curated")
+      .select("n_events").collect().map(_.getLong(0))
+    assert(nEvents.toSeq == Seq(back.size.toLong))
     // re-running a completed run is a no-op
-    assert(CurationPipeline.run(corpus, TableIO(dirB), "cur-crash",
-      numBuckets = 8).bucketsWritten == 0)
+    assert(run(dirB, "cur-crash").bucketsWritten == 0)
   }
 
   test("optional stages: paragraph boilerplate removal and benchmark " +
@@ -105,12 +128,15 @@ class CurationResumeSpec extends AnyFunSuite {
     // one eval probe = doc 5's first 8 words (planted leakage)
     val bench = Seq((900L, "unique document number 5 talks about topic5 with"))
       .toDF("bench_id", "text")
-    val cfg = CurationPipeline.Config(
-      paragraphDedup = Some(graft.ops.DedupOps.ParagraphDedup()),
-      decontaminate = Some(graft.ops.DedupOps.Decontaminate(n = 8)))
-    val (surv, converged) =
-      CurationPipeline.survivors(docs, cfg, bench = Some(bench))
-    assert(converged)
+    // paragraph dedup first, decontamination after the gate
+    val cleanAndGate: Seq[PipelineConfig.Stage] = Seq(
+      DedupOps.ParagraphDedup().apply _, CurationPipeline.qualityGate _,
+      DedupOps.Decontaminate(n = 8).survivors(_, bench))
+    val stages = cleanAndGate ++
+      Seq(CurationPipeline.exactDedup _, CurationPipeline.nearDedup _)
+    val surv = PipelineConfig.Spec(stages, router = None).apply(docs)
+    assert(resolverConverges(docs,
+      cleanAndGate :+ (CurationPipeline.exactDedup _)))
     val ids = surv.select("doc_id").collect().map(_.getLong(0)).toSet
     val baseKeep = (1 to 20).map(_.toLong).toSet + 21L + 31L
     // doc 5 decontaminated; 53 emptied by boilerplate removal then gated;
@@ -124,7 +150,7 @@ class CurationResumeSpec extends AnyFunSuite {
     assert(t51.contains("newsletter"))
     // with the stages OFF the same corpus keeps 5 and 53 — the
     // eliminations above are attributable to the optional stages
-    val plain = CurationPipeline.survivors(docs)._1
+    val plain = CurationPipeline.survivors(docs)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(plain == baseKeep + 51L + 52L + 53L)
   }

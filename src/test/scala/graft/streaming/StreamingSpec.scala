@@ -146,7 +146,7 @@ class StreamingSpec extends AnyFunSuite {
     // the gate is a pure codegen'd filter, so the BATCH operator
     // composes onto a streaming frame unchanged
     val q = StreamingDedup.exact(
-      graft.run.CurationPipeline.qualityGate(mem.toDF()))
+      graft.pipeline.CurationPipeline.qualityGate(mem.toDF()))
       .writeStream.format("memory").queryName("scur")
       .outputMode("append").start()
     mem.addData(
