@@ -69,6 +69,20 @@ object PipelineConfig {
   private def int(n: JsonNode, f: String, dflt: Int): Int =
     if (n.hasNonNull(f)) n.get(f).asInt else dflt
 
+  private def customSingle(n: JsonNode, flatten: Boolean): Stage =
+    FlusherFormats.CustomSingleWriter(
+      timeKey = str(n, "timeKey"),
+      contentKeys = strs(n, "contentKeys"),
+      tagCols = strs(n, "tagCols"),
+      source = strOpt(n, "source").getOrElse(""),
+      topic = strOpt(n, "topic").getOrElse(""),
+      tags = strMap(n, "tags"),
+      tagKeyRenameMap = strMap(n, "tagKeyRenameMap"),
+      protocolKeyRenameMap = strMap(n, "protocolKeyRenameMap"),
+      flatten = flatten,
+      onlyContents = bool(n, "onlyContents", false),
+      destKey = strOpt(n, "destKey").getOrElse("payload")).apply _
+
   /** Processor-type registry (SURVEY.md §2.12): name → stage factory. */
   val registry: Map[String, JsonNode => Stage] = Map(
     // the north-star multi-format parse (nginx/json/kv/csv/raw, `fmt`)
@@ -411,34 +425,12 @@ object PipelineConfig {
       // flusher serialization: custom_single / custom_single_flatten
       // JSON (pkg/protocol/converter/{custom_single_log,
       // converter_single_log_flatten}.go)
-      FlusherFormats.CustomSingleWriter(
-        timeKey = str(n, "timeKey"),
-        contentKeys = strs(n, "contentKeys"),
-        tagCols = strs(n, "tagCols"),
-        source = strOpt(n, "source").getOrElse(""),
-        topic = strOpt(n, "topic").getOrElse(""),
-        tags = strMap(n, "tags"),
-        tagKeyRenameMap = strMap(n, "tagKeyRenameMap"),
-        protocolKeyRenameMap = strMap(n, "protocolKeyRenameMap"),
-        flatten = bool(n, "flatten", false),
-        onlyContents = bool(n, "onlyContents", false),
-        destKey = strOpt(n, "destKey").getOrElse("payload")).apply _
+      customSingle(n, bool(n, "flatten", false))
     },
     "jsonline_pack" -> { n =>
       // jsonline = the flatten JSON shape; the text sink's one-per-line
       // write IS the newline join (pkg/protocol/converter/jsonline.go)
-      FlusherFormats.CustomSingleWriter(
-        timeKey = str(n, "timeKey"),
-        contentKeys = strs(n, "contentKeys"),
-        tagCols = strs(n, "tagCols"),
-        source = strOpt(n, "source").getOrElse(""),
-        topic = strOpt(n, "topic").getOrElse(""),
-        tags = strMap(n, "tags"),
-        tagKeyRenameMap = strMap(n, "tagKeyRenameMap"),
-        protocolKeyRenameMap = strMap(n, "protocolKeyRenameMap"),
-        flatten = true,
-        onlyContents = bool(n, "onlyContents", false),
-        destKey = strOpt(n, "destKey").getOrElse("payload")).apply _
+      customSingle(n, flatten = true)
     },
     "influx_pack" -> { n =>
       // flusher serialization: influx line protocol over metric-log
@@ -453,23 +445,17 @@ object PipelineConfig {
         destKey = strOpt(n, "destKey").getOrElse("line")).apply _
     },
     "pyroscope_groups_parse" -> { n =>
-      val tags = Option(n.get("tags")).map(_.fields.asScala
-        .map(e => e.getKey -> e.getValue.asText).toMap)
-        .getOrElse(Map.empty[String, String])
       PyroscopeOps.GroupsParser(
         bodyKey = strOpt(n, "sourceKey").getOrElse("body"),
         nameKey = strOpt(n, "nameKey").getOrElse("name"),
-        tags = tags).apply _
+        tags = strMap(n, "tags")).apply _
     },
     "pprof_parse" -> { n =>
       // pyroscope pprof body decode (gzipped profile.proto)
-      val tags = Option(n.get("tags")).map(_.fields.asScala
-        .map(e => e.getKey -> e.getValue.asText).toMap)
-        .getOrElse(Map.empty[String, String])
       PprofOps.PprofParser(
         sourceKey = strOpt(n, "sourceKey").getOrElse("payload"),
         nameKey = strOpt(n, "nameKey").getOrElse("name"),
-        tags = tags).apply _
+        tags = strMap(n, "tags")).apply _
     },
     // -- deterministic sampling / mixing (training-data curation) ----------
     "sample_hash" -> { n =>

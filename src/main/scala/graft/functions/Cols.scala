@@ -55,7 +55,10 @@ object Cols {
     * (same digits as Java's shortest repr in the non-exponent range).
     * NaN/±Inf pass through as "NaN"/"Infinity" (pdata JSON carries
     * them as strings); writers whose wire REJECTS non-finite values
-    * must null them out before calling (influx line protocol does). */
+    * must null them out before calling (influx line protocol does).
+    * `try_cast`, because under ANSI mode a plain double→long cast of
+    * 1e300 / NaN / Infinity (wire data the influx parser admits) would
+    * kill the job instead of falling through to the plain rendering. */
   def goFloat(d: Column): Column =
     when(abs(d) < 1e15 && d === d.try_cast("long").cast("double"),
       d.try_cast("long").cast("string"))

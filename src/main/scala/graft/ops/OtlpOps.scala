@@ -397,7 +397,7 @@ object OtlpOps {
 
   /** JSON-escaped quoted string (to_json of a 1-element array escapes,
     * then the brackets are trimmed). */
-  private def jsonStr(v: Column): Column =
+  private[ops] def jsonStr(v: Column): Column =
     Cols.let(to_json(array(v)))(a => a.substr(lit(2), length(a) - 2))
 
   /** The scalar arms of `json.Marshal(AsRaw())` (same contract as

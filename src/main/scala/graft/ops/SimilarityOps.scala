@@ -67,6 +67,37 @@ object SimilarityOps {
       .select((col("__p__") + 1).cast("int").as("rank"),
         col("__s__").getField("id").as(idCol))
 
+  /** The ONE query vector, double-cast (a bounded control-plane read);
+    * `None` for an empty query set. */
+  private def queryVector(query: DataFrame,
+      vecCol: String): Option[Array[Double]] =
+    query.select(transform(col(vecCol), x => x.cast("double"))).take(1)
+      .headOption.map(_.getSeq[Double](0).toArray)
+
+  /** The serving shape every approximate tier shares: read the query
+    * vector, let `candidates` pick the rows to score from it (`None`:
+    * nothing can match), then rerank them exactly against the query
+    * vector as a literal (broadcast-free). An empty query set or
+    * candidate set gives an empty (rank, id) result typed by `from`. */
+  private def serve(query: DataFrame, k: Int, idCol: String,
+      vecCol: String, from: => DataFrame)(
+      candidates: Array[Double] => Option[DataFrame]): DataFrame =
+    queryVector(query, vecCol).flatMap { qv =>
+      val qVec = array(qv.map(lit).toIndexedSeq: _*)
+      candidates(qv).map(c =>
+        rankTopK(c.withColumn("cos", cosine(col(vecCol), qVec)), k, idCol))
+    }.getOrElse(
+      from.limit(0).select(lit(0).cast("int").as("rank"), col(idCol)))
+
+  /** Driver-side dot product over the common prefix, folded left to
+    * right like the Catalyst `aggregate` it mirrors. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var d = 0
+    while (d < math.min(a.length, b.length)) { s += a(d) * b(d); d += 1 }
+    s
+  }
+
   /** Exact top-k by cosine against one query vector (broadcast). */
   def bruteForceTopK(corpus: DataFrame, query: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -124,9 +155,9 @@ object SimilarityOps {
     }
 
     /** Materialize the LSH index: the corpus written
-      * `partitionBy(bucket)` — the at-rest layout where a query scans
-      * only its probe-bucket partitions (`PartitionFilters` in the
-      * scan) instead of re-sketching the corpus per query. The IVF
+      * `partitionBy(bucket)` — the at-rest layout where a query reads
+      * only its probe-bucket partition directories instead of
+      * re-sketching the corpus per query. The IVF
       * treatment ([[IvfIndex.writeIndex]]) for the hyperplane tier. */
     def writeIndex(corpus: DataFrame, io: graft.sink.TableIO, table: String,
         vecCol: String = "embedding"): Unit =
@@ -143,12 +174,7 @@ object SimilarityOps {
       * Catalyst `aggregate` in [[bucket]] left-to-right. */
     private[ops] def probeBuckets(qv: Array[Double],
         multiProbe: Int): Seq[Long] = {
-      val dots = weights.map { w =>
-        var s = 0.0
-        var d = 0
-        while (d < math.min(w.length, qv.length)) { s += qv(d) * w(d); d += 1 }
-        s
-      }
+      val dots = weights.map(dot(qv, _))
       val qb = dots.zipWithIndex
         .map { case (s, p) => if (s > 0) 1L << p else 0L }.sum
       qb +: dots.zipWithIndex.sortBy { case (s, _) => math.abs(s) }
@@ -156,31 +182,21 @@ object SimilarityOps {
         .map { case (_, p) => qb ^ (1L << p) }.toSeq
     }
 
-    /** ANN top-k over a materialized index: the probe buckets become a
-      * partition-pruning IN-list, then exact rerank over only those
-      * partitions. `multiProbe` = how many neighboring buckets (one
-      * flipped plane each) to scan besides the query's own — the
-      * recall/IO dial; default scans all `planes`+1 Hamming-≤1
-      * buckets. */
+    /** ANN top-k over a materialized index: only the probe buckets'
+      * partition directories are read
+      * ([[graft.sink.TableIO.readPartitions]]), then exact rerank.
+      * `multiProbe` = how many neighboring buckets (one flipped plane
+      * each) to scan besides the query's own — the recall/IO dial;
+      * default scans all `planes`+1 Hamming-≤1 buckets. */
     def topKIndexed(spark: org.apache.spark.sql.SparkSession,
         io: graft.sink.TableIO, table: String, query: DataFrame, k: Int,
         multiProbe: Int = -1, idCol: String = "vec_id",
-        vecCol: String = "embedding"): DataFrame = {
-      val qRows = query
-        .select(transform(col(vecCol), x => x.cast("double")).as("__qv__"))
-        .take(1)
-      if (qRows.isEmpty)
-        return io.read(spark, table).limit(0)
-          .select(lit(0).cast("int").as("rank"), col(idCol))
-      val qv = qRows.head.getSeq[Double](0).toArray
-      val probes = if (multiProbe < 0) planes else multiProbe
-      val buckets = probeBuckets(qv, probes)
-      val qVec = array(qv.map(lit).toIndexedSeq: _*) // literal: broadcast-free
-      val cand = io.read(spark, table)
-        .where(col("bucket").isin(buckets: _*)) // partition pruning
-      val scored = cand.withColumn("cos", cosine(col(vecCol), qVec))
-      rankTopK(scored, k, idCol)
-    }
+        vecCol: String = "embedding"): DataFrame =
+      serve(query, k, idCol, vecCol, io.read(spark, table)) { qv =>
+        val probes = if (multiProbe < 0) planes else multiProbe
+        io.readPartitions(spark, table,
+          probeBuckets(qv, probes).map(b => Seq("bucket" -> b)))
+      }
   }
 
   /** Banded multi-table sign-LSH — the PRODUCTION hyperplane tier.
@@ -209,10 +225,10 @@ object SimilarityOps {
     * parallel, no shuffle); the index is the corpus exploded into one
     * row per (table, bucket) and written `partitionBy(t, bucket)` — the
     * standard ×T storage cost of multi-table LSH — so a query reads
-    * `T × (planes+1)` bucket partitions via partition pruning and
-    * reranks exactly. Weights are plan-time ±1 constants from
-    * md5(table:plane:dim) parity ([[PortableHash.md5Hex]]), portable to
-    * any engine.
+    * `T × (planes+1)` bucket partition directories (path-scoped, no
+    * listing of the rest) and reranks exactly. Weights are plan-time
+    * ±1 constants from md5(table:plane:dim) parity
+    * ([[PortableHash.md5Hex]]), portable to any engine.
     */
   final case class BandedSignLsh(tables: Int = 16, planes: Int = 8,
       dims: Int = 64) {
@@ -246,13 +262,8 @@ object SimilarityOps {
       * `aggregate` in [[sketch]] left-to-right. */
     private[ops] def probeBuckets(qv: Array[Double]): Array[Array[Long]] =
       Array.tabulate(tables) { t =>
-        val qb = (0 until planes).map { p =>
-          val w = weights(t)(p)
-          var s = 0.0
-          var d = 0
-          while (d < math.min(w.length, qv.length)) { s += qv(d) * w(d); d += 1 }
-          if (s > 0) 1L << p else 0L
-        }.sum
+        val qb = (0 until planes)
+          .map(p => if (dot(qv, weights(t)(p)) > 0) 1L << p else 0L).sum
         qb +: Array.tabulate(planes)(p => qb ^ (1L << p))
       }
 
@@ -272,26 +283,15 @@ object SimilarityOps {
     /** ANN top-k without a materialized index: one corpus scan with the
       * probe predicate, exact cosine rerank of the survivors. */
     def topK(corpus: DataFrame, query: DataFrame, k: Int,
-        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-      val qRows = query
-        .select(transform(col(vecCol), x => x.cast("double")).as("__qv__"))
-        .take(1)
-      if (qRows.isEmpty)
-        return corpus.limit(0)
-          .select(lit(0).cast("int").as("rank"), col(idCol))
-      val qv = qRows.head.getSeq[Double](0).toArray
-      val probes = probeBuckets(qv)
-      val qVec = array(qv.map(lit).toIndexedSeq: _*)
-      val cand = corpus.where(candidate(sketch(col(vecCol)), probes))
-      val scored = cand.withColumn("cos", cosine(col(vecCol), qVec))
-      rankTopK(scored, k, idCol)
-    }
+        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      serve(query, k, idCol, vecCol, corpus) { qv =>
+        Some(corpus.where(candidate(sketch(col(vecCol)), probeBuckets(qv))))
+      }
 
     /** Materialize the index: the corpus exploded into one row per
       * (table, bucket) and written `partitionBy(t, bucket)` — a query
-      * scans only its probe partitions (`PartitionFilters` in the
-      * scan). The ×`tables` storage cost is the standard multi-table
-      * LSH trade. */
+      * reads only its probe partition directories. The ×`tables`
+      * storage cost is the standard multi-table LSH trade. */
     def writeIndex(corpus: DataFrame, io: graft.sink.TableIO, table: String,
         vecCol: String = "embedding"): Unit =
       io.overwritePartitions(
@@ -300,44 +300,20 @@ object SimilarityOps {
         table, Seq("t", "bucket"))
 
     /** ANN top-k over a materialized index, reading ONLY the probe
-      * partition directories (`t=<t>/bucket=<b>` paths given to the
-      * reader explicitly, with `basePath` recovering the partition
-      * columns). Pruning by PREDICATE over the root is equivalent but
-      * pays full partition DISCOVERY first — tables × 2^planes
-      * directories listed per query (measured 6 s of listing for a
-      * 4096-dir index whose probe set is 144 dirs; path-scoped reads
-      * are sub-second). A metastore-backed catalog does this pruning
-      * server-side; on a bare parquet directory the probe paths ARE
-      * that catalog. A vector found in several tables dedupes by id
-      * before the exact rerank. */
+      * partition directories `t=<t>/bucket=<b>`
+      * ([[graft.sink.TableIO.readPartitions]]: tables × (planes+1)
+      * paths, not a listing of all tables × 2^planes). A vector found
+      * in several tables dedupes by id before the exact rerank. */
     def topKIndexed(spark: org.apache.spark.sql.SparkSession,
         io: graft.sink.TableIO, table: String, query: DataFrame, k: Int,
-        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-      val empty = () => io.read(spark, table).limit(0)
-        .select(lit(0).cast("int").as("rank"), col(idCol))
-      val qRows = query
-        .select(transform(col(vecCol), x => x.cast("double")).as("__qv__"))
-        .take(1)
-      if (qRows.isEmpty) return empty()
-      val qv = qRows.head.getSeq[Double](0).toArray
-      val probes = probeBuckets(qv)
-      val root = io.path(table)
-      // bounded control plane: tables × (planes+1) existence probes
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-      val paths = for {
-        t <- 0 until tables
-        b <- probes(t)
-        p = s"$root/t=$t/bucket=$b"
-        if fs.exists(new org.apache.hadoop.fs.Path(p))
-      } yield p
-      if (paths.isEmpty) return empty()
-      val cand = spark.read.option("basePath", root).parquet(paths: _*)
-        .dropDuplicates(idCol) // a vector can match in several tables
-      val qVec = array(qv.map(lit).toIndexedSeq: _*)
-      val scored = cand.withColumn("cos", cosine(col(vecCol), qVec))
-      rankTopK(scored, k, idCol)
-    }
+        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      serve(query, k, idCol, vecCol, io.read(spark, table)) { qv =>
+        val probes = probeBuckets(qv)
+        io.readPartitions(spark, table, for {
+          t <- 0 until tables; b <- probes(t)
+        } yield Seq("t" -> t, "bucket" -> b))
+          .map(_.dropDuplicates(idCol)) // a match in several tables
+      }
 
     /** Banded near-dup PAIRS: candidates share a bucket in ANY table
       * (one row per (table, bucket) each side, equi-join, pair dedup),
@@ -455,12 +431,10 @@ object SimilarityOps {
         cents: Array[Array[Double]]): Seq[Int] = {
       val nq = math.sqrt(qv.map(x => x * x).sum)
       cents.zipWithIndex.map { case (c, i) =>
-        var dot = 0.0
-        var d = 0
-        while (d < math.min(c.length, qv.length)) { dot += qv(d) * c(d); d += 1 }
         val den = nq * math.sqrt(c.map(x => x * x).sum)
         // SQL `round` leaves NaN and infinities as they are
-        (Option.when(den != 0.0)(dot / den).map(x => if (!x.isFinite) x
+        (Option.when(den != 0.0)(dot(qv, c) / den).map(x =>
+          if (!x.isFinite) x
           else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble), i)
       }.sorted(Ordering.Tuple2(Ordering.Option(Ordering.Double.TotalOrdering),
         Ordering.Int).reverse).take(nprobe).map(_._2).toSeq
@@ -493,9 +467,8 @@ object SimilarityOps {
     }
 
     /** Materialize the IVF index: the corpus written `partitionBy(cell)`
-      * — the at-rest layout where a query SCANS ONLY its nprobe cell
-      * partitions instead of the corpus (partition pruning shows up as
-      * `PartitionFilters: [cell IN (...)]` in the scan). Returns the
+      * — the at-rest layout where a query READS ONLY its nprobe cell
+      * partition directories instead of the corpus. Returns the
       * centroids to pass to [[topKIndexed]]. */
     def writeIndex(corpus: DataFrame, io: graft.sink.TableIO, table: String,
         idCol: String = "vec_id", vecCol: String = "embedding")
@@ -506,47 +479,27 @@ object SimilarityOps {
       cents
     }
 
-    /** ANN top-k over a materialized index: the query's nprobe best
-      * cells become a partition-pruning predicate (a bounded driver-side
-      * list, like the reference's shard lookup), then exact rerank over
-      * only those partitions. */
+    /** ANN top-k over a materialized index: only the query's nprobe
+      * best cells' partition directories are read (a bounded
+      * driver-side list, like the reference's shard lookup;
+      * [[graft.sink.TableIO.readPartitions]]), then exact rerank. */
     def topKIndexed(spark: org.apache.spark.sql.SparkSession,
         io: graft.sink.TableIO, table: String,
         cents: Array[Array[Double]], query: DataFrame, k: Int,
-        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-      // ONE query vector: bounded control-plane read
-      val qRows = query
-        .select(transform(col(vecCol), x => x.cast("double")).as("__qv__"))
-        .take(1)
-      if (qRows.isEmpty)
-        return io.read(spark, table).limit(0)
-          .select(lit(0).cast("int").as("rank"), col(idCol))
-      val qv = qRows.head.getSeq[Double](0).toArray
-      val qCells = probeCells(qv, cents)
-      val qVec = array(qv.map(lit).toIndexedSeq: _*) // literal: broadcast-free
-      val cand = io.read(spark, table)
-        .where(col("cell").isin(qCells: _*)) // partition pruning
-      val scored = cand.withColumn("cos", cosine(col(vecCol), qVec))
-      rankTopK(scored, k, idCol)
-    }
+        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      serve(query, k, idCol, vecCol, io.read(spark, table)) { qv =>
+        io.readPartitions(spark, table,
+          probeCells(qv, cents).map(c => Seq("cell" -> c)))
+      }
 
     /** ANN top-k: probe the query's nprobe best cells, exact rerank. */
     def topK(corpus: DataFrame, query: DataFrame, k: Int,
         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
       val cents = centroids(corpus, idCol, vecCol)
-      val qRows = query
-        .select(transform(col(vecCol), x => x.cast("double")).as("__qv__"))
-        .take(1)
-      if (qRows.isEmpty)
-        return corpus.limit(0)
-          .select(lit(0).cast("int").as("rank"), col(idCol))
-      val qv = qRows.head.getSeq[Double](0).toArray
-      val qCells = probeCells(qv, cents)
-      val qVec = array(qv.map(lit).toIndexedSeq: _*)
-      val cand = assign(corpus, cents, idCol, vecCol, cellCol = "__cell__")
-        .where(col("__cell__").isin(qCells: _*))
-      val scored = cand.withColumn("cos", cosine(col(vecCol), qVec))
-      rankTopK(scored, k, idCol)
+      serve(query, k, idCol, vecCol, corpus) { qv =>
+        Some(assign(corpus, cents, idCol, vecCol, cellCol = "__cell__")
+          .where(col("__cell__").isin(probeCells(qv, cents): _*)))
+      }
     }
   }
 

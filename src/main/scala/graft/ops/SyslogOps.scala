@@ -49,9 +49,6 @@ object SyslogOps {
         fields(col(sourceKey)))
   }
 
-  private def packGroups(src: Column, anchored: String, n: Int): Column =
-    Cols.packGroups(src, anchored, n)
-
   /** Month name → 1-12; an unknown name yields 0, which
     * try_make_timestamp folds to null (= parse failure). Deliberately
     * NOT nullif-based: nullif is a RuntimeReplaceable that Spark 4
@@ -88,7 +85,7 @@ object SyslogOps {
       * even if a predicate reorder evaluates it on a non-matching row
       * (where the packed groups are garbage). */
     private def tsExpr(src: Column): Column = {
-      val g = packGroups(src, regex, 10)
+      val g = Cols.packGroups(src, regex, 10)
       call_function("try_make_timestamp",
         lit(year), monthNum(try_element_at(g, lit(2))),
         try_element_at(g, lit(3)).try_cast("int"),
@@ -106,7 +103,7 @@ object SyslogOps {
         tsExpr(src).isNotNull // subsumes the month-name check
 
     override def fields(src: Column): Map[String, Column] = {
-      val g = packGroups(src, regex, 10)
+      val g = Cols.packGroups(src, regex, 10)
       val pri = element_at(g, 1).cast("int")
       val ts = tsExpr(src)
       Map(
@@ -150,7 +147,7 @@ object SyslogOps {
       when(c === "-", lit(null: String)).otherwise(c)
 
     override def fields(src: Column): Map[String, Column] = {
-      val g = packGroups(src, regex, 9)
+      val g = Cols.packGroups(src, regex, 9)
       val pri = element_at(g, 1).cast("int")
       val tsTok = element_at(g, 3)
       Map(

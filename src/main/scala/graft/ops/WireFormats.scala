@@ -56,18 +56,6 @@ object WireFormats {
     private val tagRe = s",($ident)=($ident)"
     private val fieldRe = s"(?:^|,)($ident)=($quoted|$bare)"
 
-    /** Go strconv 'g' shortest rendering for the doubles a fixture
-      * produces: integral → no ".0" (1.0 → "1"), else plain decimal.
-      * `try_cast` everywhere: the input is wire data, and under ANSI
-      * mode (session default) a plain double→long cast of 1e300 / NaN /
-      * Infinity — all of which the bare-value regex admits — would kill
-      * the job instead of falling through to the plain rendering. */
-    private def renderFloat(d: Column): Column =
-      when(abs(d) < 1e15 &&
-          d === d.try_cast("long").cast("double"),
-        d.try_cast("long").cast("string"))
-        .otherwise(d.cast("string"))
-
     def apply(df: DataFrame): DataFrame = {
       val src = col(sourceKey)
       val ok = src.isNotNull && src.rlike(regex)
@@ -117,7 +105,7 @@ object WireFormats {
             "\\\\\"", "\""), "\\\\\\\\", "\\\\"))
         .when(isInt, regexp_replace(fval, "i$", ""))
         .when(isBool, when(lower(fval).isin("t", "true"), "1").otherwise("0"))
-        .when(asFloat.isNotNull, renderFloat(asFloat))
+        .when(asFloat.isNotNull, Cols.goFloat(asFloat))
       val out = parsed
         .withColumn("__ftype__", ftype)
         .withColumn("__fkey__", fkey)
@@ -171,11 +159,6 @@ object WireFormats {
                 body: $anyVal,
                 attributes: $kvs>>>>>>"""
 
-    /** JSON-escaped quoted string: to_json of a 1-element array does
-      * the escaping, then the brackets are trimmed. */
-    private def jsonStr(v: Column): Column =
-      Cols.let(to_json(array(v)))(a => a.substr(lit(2), length(a) - 2))
-
     /** One AnyValue rendered as a JSON scalar the way `json.Marshal`
       * renders `AsRaw()`: strings quoted+escaped, int64 (a STRING in
       * proto3 JSON) bare, bools bare. The intValue branch emits the
@@ -184,10 +167,12 @@ object WireFormats {
       * `"intValue":"12abc"` can't splice invalid JSON into the output:
       * it falls through to quoted-string rendering instead. */
     private def renderAny(v: Column): Column =
-      when(v.getField("stringValue").isNotNull, jsonStr(v.getField("stringValue")))
+      when(v.getField("stringValue").isNotNull,
+          OtlpOps.jsonStr(v.getField("stringValue")))
         .when(v.getField("intValue").try_cast("long").isNotNull,
           v.getField("intValue").try_cast("long").cast("string"))
-        .when(v.getField("intValue").isNotNull, jsonStr(v.getField("intValue")))
+        .when(v.getField("intValue").isNotNull,
+          OtlpOps.jsonStr(v.getField("intValue")))
         .when(v.getField("boolValue").isNotNull,
           v.getField("boolValue").cast("string"))
         .when(v.getField("doubleValue").isNotNull,
@@ -209,7 +194,7 @@ object WireFormats {
           array_join(transform(
             array_sort(transform(attrs, a => struct(
               a.getField("key").as("k"),
-              concat(jsonStr(a.getField("key")), lit(":"),
+              concat(OtlpOps.jsonStr(a.getField("key")), lit(":"),
                 renderAny(a.getField("value"))).as("e")))),
             s => s.getField("e")), ","), lit("}")))
 

@@ -74,7 +74,7 @@ object Fixtures {
 
   /** Build-once index cache keyed on the sf dir, at
     * `/tmp/graft_<table>_<dir>`: repeated invocations (the bench runs a
-    * query several times) measure the partition-pruned LOOKUP, not index
+    * query several times) measure the path-scoped LOOKUP, not index
     * construction, and nothing leaks per call. The cache is the
     * `<table>.done` marker written AFTER `write` (dynamic partition
     * overwrite suppresses _SUCCESS): a crashed mid-write index is

@@ -31,6 +31,7 @@ object PipelineRunner {
       spec: PipelineConfig.Spec = TranscriptPipeline.spec): RunResult = {
     val writer = spec.writer(io)
 
+    // by name: a rerun of a completed run never builds the plan
     val written = writer.write(spec(input), runId, maxBuckets)
 
     if (maxBuckets == Int.MaxValue) {
@@ -39,7 +40,10 @@ object PipelineRunner {
       spec.sink.flatMap(_.aggBucket).foreach(b =>
         io.overwrite(AggOps.sinkAggregates(back, bucket = b),
           "sink_aggregates"))
-      if (written > 0) Metrics.record(io, runId, back, writer.bucketKeys)
+      // a run that died after its last bucket but before its metrics
+      // landed gets them on the rerun that writes nothing
+      if (written > 0 || !Metrics.recorded(input.sparkSession, io, runId))
+        Metrics.record(io, runId, back, writer.bucketKeys)
       RunResult(runId, written, complete = true)
     } else RunResult(runId, written, complete = false)
   }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.GroupOps
 
@@ -48,27 +48,33 @@ final case class FanOutWriter(
     * writer adds them to the data. Streaming passes its micro-batch id,
     * so a REPLAYED batch overwrites only its own partitions while
     * successive batches append.
+    *
+    * `routed` is taken by name and built at most once, AFTER lineage
+    * says what is left: a spec may do eager work while its plan is
+    * built (curation's near-dup resolution runs jobs), and a rerun of
+    * a completed run must not pay for it. Only the undeclared-sink
+    * fallback needs the data to list its candidates.
     */
-  def write(routed: DataFrame, runId: String,
+  def write(routed: => DataFrame, runId: String,
       maxBuckets: Int = Int.MaxValue,
       batchPartition: Seq[(String, Any)] = Nil): Int = {
-    val spark = routed.sparkSession
-    val data0 = bucketed(batchPartition.foldLeft(routed) {
-      case (df, (c, v)) => df.withColumn(c, lit(v))
-    })
-    // A declared sink set is a CONTRACT: a routed row with an
-    // undeclared sink would be silently dropped on resume and never
-    // lineage-recorded, so fail the write loudly instead — the check
-    // rides the write pass, no extra scan.
-    val data =
+    lazy val data = {
+      val data0 = bucketed(batchPartition.foldLeft(routed) {
+        case (df, (c, v)) => df.withColumn(c, lit(v))
+      })
+      // A declared sink set is a CONTRACT: a routed row with an
+      // undeclared sink would be silently dropped on resume and never
+      // lineage-recorded, so fail the write loudly instead — the check
+      // rides the write pass, no extra scan.
       if (sinks.isEmpty) data0
       else data0.withColumn("__sink__",
         when(col("__sink__").isin(sinks: _*), col("__sink__"))
           .otherwise(raise_error(concat(
             lit("routed sink not in FanOutWriter.sinks: "),
             col("__sink__")))))
+    }
 
-    val done = Lineage.completed(spark, io, runId)
+    val done = Lineage.completed(SparkSession.active, io, runId)
 
     // Candidate partitions: statically sinks × numBuckets (no data
     // scan); the distinct() pass over the data is only the fallback when
@@ -82,6 +88,7 @@ final case class FanOutWriter(
 
     val allBuckets = candidates.filterNot(done).sorted.take(maxBuckets)
     if (allBuckets.isEmpty) return 0
+    val spark = data.sparkSession
 
     // Common path (fresh complete run): nothing done, nothing truncated
     // → write the whole input with NO pending filter. Resume/partial

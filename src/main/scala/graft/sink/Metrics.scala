@@ -34,6 +34,11 @@ object Metrics {
     io.append(rows, table)
   }
 
+  /** Whether `_metrics` holds any row for `runId`. */
+  def recorded(spark: SparkSession, io: TableIO, runId: String): Boolean =
+    io.exists(spark, table) &&
+      !io.read(spark, table).where(col("run_id") === runId).isEmpty
+
   /** Parse-failure count for a run (fmt = raw rows kept by the
     * keep-source-on-fail contract). */
   def parseFailures(spark: SparkSession, io: TableIO, runId: String): Long =

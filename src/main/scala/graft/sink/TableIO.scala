@@ -79,6 +79,19 @@ final case class TableIO(root: String,
   def overwrite(df: DataFrame, table: String): Unit =
     writer(df).mode("overwrite").parquet(path(table))
 
+  /** One partition's directory, `<table>/<col>=<value>/…` in the given
+    * order, named with Spark's own Hive partition-path escaping (a null
+    * or empty value is the default-partition directory), so it matches
+    * what the writer produced even for special characters. */
+  private def partitionPath(table: String,
+      partition: Seq[(String, Any)]): org.apache.hadoop.fs.Path = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    new org.apache.hadoop.fs.Path((path(table) +: partition.map {
+      case (c, v) => ExternalCatalogUtils.getPartitionPathString(c,
+        Option(v).map(String.valueOf).orNull)
+    }).mkString("/"))
+  }
+
   /** Delete specific partition directories (bounded, driver-side — the
     * declared partition space is ≤ sinks × buckets). Dynamic partition
     * overwrite only replaces partitions PRESENT in the written data;
@@ -86,22 +99,36 @@ final case class TableIO(root: String,
     * attempted-but-now-empty ones too, or stale rows from an earlier
     * run survive in them. `subdirs` appends deeper partition levels
     * (e.g. streaming's `__batch__=<id>`). Paths go through the Hadoop
-    * FileSystem API (scheme-aware, no listFiles NPE) with Spark's own
-    * Hive partition-value escaping, so the directory names match what
-    * the writer produced even for special characters. */
+    * FileSystem API (scheme-aware, no listFiles NPE). */
   def deletePartitions(spark: SparkSession, table: String,
       pairs: Seq[(String, Int)],
       subdirs: Seq[(String, String)] = Nil): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val conf = spark.sparkContext.hadoopConfiguration
     pairs.foreach { case (s, b) =>
-      val parts = Seq(s"__sink__=${escapePathName(s)}", s"__bucket__=$b") ++
-        subdirs.map { case (c, v) => s"$c=${escapePathName(v)}" }
-      val target = new org.apache.hadoop.fs.Path(
-        (path(table) +: parts).mkString("/"))
+      val target = partitionPath(table,
+        Seq("__sink__" -> s, "__bucket__" -> b) ++ subdirs)
       val fs = target.getFileSystem(conf)
       if (fs.exists(target)) fs.delete(target, true): Unit
     }
+  }
+
+  /** Read ONLY the listed partitions of `table`: their directories go
+    * to the reader as explicit paths, with `basePath` recovering the
+    * partition columns. Pruning by a predicate over the table root
+    * reads the same rows but DISCOVERS every partition directory first
+    * (measured: 6 s of listing for a 4096-directory index whose probe
+    * set is 144 directories, 0.77 s path-scoped). A metastore-backed
+    * catalog prunes server-side; on a bare parquet directory the
+    * partition paths are that catalog. Partitions without a directory
+    * are skipped (bounded driver-side existence checks); `None` when
+    * none exists. */
+  def readPartitions(spark: SparkSession, table: String,
+      partitions: Seq[Seq[(String, Any)]]): Option[DataFrame] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val paths = partitions.map(partitionPath(table, _)).distinct
+      .filter(p => p.getFileSystem(conf).exists(p))
+    Option.when(paths.nonEmpty)(spark.read.option("basePath", path(table))
+      .parquet(paths.map(_.toString): _*))
   }
 
   /** Bucketed write (Hive-style layout via `saveAsTable`): rows are

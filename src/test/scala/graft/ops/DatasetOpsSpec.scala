@@ -409,9 +409,13 @@ class DatasetOpsSpec extends AnyFunSuite {
     val ivf = SimilarityOps.IvfIndex(nlist = 2, nprobe = 1)
     val cents = ivf.writeIndex(corpus, io, "ivf_index")
     val viaIndex = ivf.topKIndexed(spark, io, "ivf_index", cents, query, 4)
-    // pruning visible in the scan: only the probed cell partitions read
-    val plan = viaIndex.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
+    // the read is path-scoped: every input file lies under the probed
+    // cell=<c> dir (nprobe = 1 of 2 cells)
+    val qv = Array(1f, 0.05f, 0f, 0f).map(_.toDouble)
+    val probed = ivf.probeCells(qv, cents).toSet
+    val files = viaIndex.inputFiles
+    assert(files.nonEmpty && files.forall(f => probed.exists(c =>
+      f.contains(s"/cell=$c/"))), (probed, files.toSeq))
     val direct = ivf.topK(corpus, query, 4).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSeq
     val indexed = viaIndex.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
@@ -440,9 +444,13 @@ class DatasetOpsSpec extends AnyFunSuite {
     val lsh = SimilarityOps.SignLsh(planes = 4, dims = 4)
     lsh.writeIndex(corpus, io, "lsh_index")
     val via = lsh.topKIndexed(spark, io, "lsh_index", query, 4)
-    // pruning visible in the scan: only probe-bucket partitions read
-    val plan = via.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
+    // the read is path-scoped: every input file lies under a probed
+    // bucket=<b> dir
+    val qv = Array(1f, 0.05f, 0f, 0f).map(_.toDouble)
+    val probed = lsh.probeBuckets(qv, 4).toSet
+    val files = via.inputFiles
+    assert(files.nonEmpty && files.forall(f => probed.exists(b =>
+      f.contains(s"/bucket=$b/"))), (probed, files.toSeq))
     // multiProbe=0 = exact bucket only → same rows as the one-shot topK
     val exact = lsh.topKIndexed(spark, io, "lsh_index", query, 4,
       multiProbe = 0).collect().map(r => (r.getInt(0), r.getLong(1))).toSeq

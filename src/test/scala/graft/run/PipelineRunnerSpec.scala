@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.config.PipelineConfig
+import graft.ops.RouteOps
 import graft.pipeline.{CurationPipeline, TranscriptPipeline}
 import graft.sink.TableIO
 import graft.sources.Transcripts
@@ -70,5 +71,45 @@ class PipelineRunnerSpec extends AnyFunSuite {
       val metrics = roots.map(d => rows(table(d, "_metrics")))
       assert(metrics(0).nonEmpty && metrics(0) == metrics(1))
     }
+  }
+
+  /** A one-processor spec over the transcript table: the processor
+    * counts how often the plan is built, on the driver. */
+  private def countingSpec(calls: java.util.concurrent.atomic.AtomicInteger) =
+    PipelineConfig.Spec(
+      Seq { (df: DataFrame) => calls.incrementAndGet(); df },
+      router = Some(RouteOps.LogstoreRouter("tool", Nil, defaultSink = "all")),
+      sink = Some(PipelineConfig.SinkSpec("events_routed", 4, Seq("conv_id"),
+        None)))
+
+  test("a rerun of a completed run builds no plan and writes nothing") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val spec = countingSpec(calls)
+    val input = Transcripts.generate(spark, 20, seed = 5)
+    val io = TableIO(Files.createTempDirectory("graft-rerun").toString)
+    val first = PipelineRunner.run(input, io, "r1", spec = spec)
+    assert(first.complete && first.bucketsWritten == 4)
+    val again = PipelineRunner.run(input, io, "r1", spec = spec)
+    assert(again.complete && again.bucketsWritten == 0)
+    assert(calls.get == 1)
+  }
+
+  test("a rerun records the metrics of a run that died after its last bucket") {
+    val spec = countingSpec(new java.util.concurrent.atomic.AtomicInteger)
+    val input = Transcripts.generate(spark, 20, seed = 5)
+    val dir = Files.createTempDirectory("graft-metrics").toString
+    val io = TableIO(dir)
+    PipelineRunner.run(input, io, "m1", spec = spec)
+    val metrics = spark.read.parquet(s"$dir/_metrics")
+    val firstRows = rows(metrics.where(col("run_id") === "m1"))
+    assert(firstRows.nonEmpty)
+    // the crash: every bucket and its lineage landed, the metrics did not
+    val kept = metrics.where(col("run_id") =!= "m1").collect().toSeq
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), metrics.schema)
+      .write.mode("overwrite").parquet(s"$dir/_metrics")
+    assert(spark.read.parquet(s"$dir/_metrics").isEmpty)
+    assert(PipelineRunner.run(input, io, "m1", spec = spec).bucketsWritten == 0)
+    assert(rows(spark.read.parquet(s"$dir/_metrics")
+      .where(col("run_id") === "m1")) == firstRows)
   }
 }
