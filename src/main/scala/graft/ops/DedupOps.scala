@@ -133,15 +133,22 @@ object DedupOps {
         col("band"), col("bucket"))
       val c = b.select(col(idCol).as("doc_b"), col("mh").as("mb"),
         col("band"), col("bucket"))
+      estJaccard(a.join(c, Seq("band", "bucket"))
+        .where(col("doc_a") < col("doc_b")), "doc_a", "doc_b")
+    }
+
+    /** The distinct (a, b) signature pairs of `cand` (a, b, ma, mb) with
+      * their estimated Jaccard (the share of equal slots), kept at ≥
+      * threshold: (a, b, est_jaccard). */
+    private def estJaccard(cand: DataFrame, a: String, b: String): DataFrame = {
       val matches = size(filter(
         zip_with(col("ma"), col("mb"), (x, y) => (x === y).cast("int")),
         v => v === 1))
-      a.join(c, Seq("band", "bucket")).where(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("ma"), col("mb")).distinct()
+      cand.select(col(a), col(b), col("ma"), col("mb")).distinct()
         .withColumn("est_jaccard",
           round(matches.cast("double") / numHashes, 4))
         .where(col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
+        .select(a, b, "est_jaccard")
     }
 
     /** INCREMENTAL near-dup: candidate pairs between a NEW document
@@ -161,17 +168,8 @@ object DedupOps {
       val ob = banded(existingSig, idCol)
         .select(col(idCol).as("doc_old"), col("mh").as("mb"),
           col("band"), col("bucket"))
-      val matches = size(filter(
-        zip_with(col("ma"), col("mb"), (x, y) => (x === y).cast("int")),
-        v => v === 1))
-      nb.join(ob, Seq("band", "bucket"))
-        .where(col("doc_new") =!= col("doc_old"))
-        .select(col("doc_new"), col("doc_old"), col("ma"), col("mb"))
-        .distinct()
-        .withColumn("est_jaccard",
-          round(matches.cast("double") / numHashes, 4))
-        .where(col("est_jaccard") >= threshold)
-        .select("doc_new", "doc_old", "est_jaccard")
+      estJaccard(nb.join(ob, Seq("band", "bucket"))
+        .where(col("doc_new") =!= col("doc_old")), "doc_new", "doc_old")
     }
   }
 

@@ -98,6 +98,50 @@ object SimilarityOps {
     s
   }
 
+  /** The rounded cosine (4 dp, the engine-portable rule) of vectors `a`
+    * and `b` with their hoisted norms; a zero norm gives null. */
+  private def roundedCos(a: Column, na: Column, b: Column, nb: Column): Column =
+    round(try_divide(aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0),
+      (acc, x) => acc + x), na * nb), 4)
+
+  /** The pair check of every near-dup path: `prepped` ([[normed]], plus
+    * `keys`) joined with itself on `keys` (every pair when there are
+    * none) into (vec_a, vec_b) with vec_a < vec_b, kept when the rounded
+    * cosine reaches `threshold`: (vec_a, vec_b, keys…, cos). */
+  private def verifiedPairs(prepped: DataFrame, idCol: String,
+      keys: Seq[String], threshold: Double): DataFrame = {
+    def side(s: String) = prepped.select(keys.map(col) ++ Seq(
+      col(idCol).as(s"vec_$s"), col("__v__").as(s"v$s"),
+      col("__n__").as(s"n$s")): _*)
+    side("a").join(side("b"), keys).where(col("vec_a") < col("vec_b"))
+      .withColumn("cos",
+        roundedCos(col("va"), col("na"), col("vb"), col("nb")))
+      .where(col("cos") >= threshold)
+      .select((("vec_a" +: "vec_b" +: keys) :+ "cos").map(col): _*)
+  }
+
+  /** ±1 hyperplane weight from the parity of md5(key)'s first hex digit:
+    * a plan-time constant any engine can reproduce. */
+  private def planeWeight(key: String): Double =
+    if ((Integer.parseInt(PortableHash.md5Hex(key).substring(0, 1), 16) & 1) == 1)
+      1.0 else -1.0
+
+  /** Bucket id of the double-cast vector `vd` under the hyperplanes
+    * `planes`: bit p set iff dot(vd, planes(p)) > 0, where elements past
+    * either array's end count as 0 (the driver-side [[signBucket]] and
+    * the oracle's out-of-range reads agree). */
+  private def signBits(vd: Column, planes: Array[Array[Double]]): Column =
+    planes.indices.map { p =>
+      val dot = aggregate(zip_with(vd, array(planes(p).map(lit): _*),
+        (x, y) => coalesce(x * y, lit(0.0))), lit(0.0), (acc, x) => acc + x)
+      when(dot > 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
+  /** [[signBits]] for ONE driver-side vector, folded like the Catalyst
+    * `aggregate`. */
+  private def signBucket(qv: Array[Double], planes: Array[Array[Double]]): Long =
+    planes.indices.map(p => if (dot(qv, planes(p)) > 0) 1L << p else 0L).sum
+
   /** Exact top-k by cosine against one query vector (broadcast). */
   def bruteForceTopK(corpus: DataFrame, query: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -121,23 +165,13 @@ object SimilarityOps {
 
     /** Plan-time weight matrix: w(p)(d) ∈ {-1,+1}. */
     val weights: Array[Array[Double]] =
-      Array.tabulate(planes, dims) { (p, d) =>
-        val hex = PortableHash.md5Hex(s"$p:$d")
-        if ((Integer.parseInt(hex.substring(0, 1), 16) & 1) == 1) 1.0 else -1.0
-      }
+      Array.tabulate(planes, dims)((p, d) => planeWeight(s"$p:$d"))
 
     /** Bucket id column: bit p set iff dot(vec, w_p) > 0. The cast
       * vector is let-bound so it is built once, not once per plane. */
     def bucket(vecCol: Column): Column =
-      graft.functions.Cols.let(transform(vecCol, x => x.cast("double"))) { vd =>
-        val bits = (0 until planes).map { p =>
-          val w = array(weights(p).map(lit): _*)
-          val dot = aggregate(zip_with(vd, w, (x, y) => x * y),
-            lit(0.0), (acc, x) => acc + x)
-          when(dot > 0, lit(1L << p)).otherwise(lit(0L))
-        }
-        bits.reduce(_ + _)
-      }
+      graft.functions.Cols.let(transform(vecCol, x => x.cast("double")))(
+        signBits(_, weights))
 
     /** ANN top-k: restrict to the query's bucket, exact cosine rerank.
       * Returns (rank, idCol) like the brute-force tier. One-shot: the
@@ -175,8 +209,7 @@ object SimilarityOps {
     private[ops] def probeBuckets(qv: Array[Double],
         multiProbe: Int): Seq[Long] = {
       val dots = weights.map(dot(qv, _))
-      val qb = dots.zipWithIndex
-        .map { case (s, p) => if (s > 0) 1L << p else 0L }.sum
+      val qb = signBucket(qv, weights)
       qb +: dots.zipWithIndex.sortBy { case (s, _) => math.abs(s) }
         .take(math.max(0, math.min(multiProbe, planes)))
         .map { case (_, p) => qb ^ (1L << p) }.toSeq
@@ -236,24 +269,14 @@ object SimilarityOps {
 
     /** Plan-time weight matrix: w(t)(p)(d) ∈ {-1,+1}. */
     val weights: Array[Array[Array[Double]]] =
-      Array.tabulate(tables, planes, dims) { (t, p, d) =>
-        val hex = PortableHash.md5Hex(s"$t:$p:$d")
-        if ((Integer.parseInt(hex.substring(0, 1), 16) & 1) == 1) 1.0 else -1.0
-      }
+      Array.tabulate(tables, planes, dims)((t, p, d) => planeWeight(s"$t:$p:$d"))
 
     /** Sketch column: array of `tables` bucket ids (bit p of element t
       * set iff dot(vec, w_tp) > 0). The cast vector is let-bound so it
       * is built once, not once per (table, plane). */
     def sketch(vecCol: Column): Column =
       graft.functions.Cols.let(transform(vecCol, x => x.cast("double"))) { vd =>
-        array((0 until tables).map { t =>
-          (0 until planes).map { p =>
-            val w = array(weights(t)(p).map(lit): _*)
-            val dot = aggregate(zip_with(vd, w, (x, y) => x * y),
-              lit(0.0), (acc, x) => acc + x)
-            when(dot > 0, lit(1L << p)).otherwise(lit(0L))
-          }.reduce(_ + _)
-        }: _*)
+        array(weights.map(signBits(vd, _)).toIndexedSeq: _*)
       }
 
     /** Driver-side per-table probe buckets for ONE query vector: its
@@ -261,9 +284,8 @@ object SimilarityOps {
       * control-plane math; the per-plane fold matches the Catalyst
       * `aggregate` in [[sketch]] left-to-right. */
     private[ops] def probeBuckets(qv: Array[Double]): Array[Array[Long]] =
-      Array.tabulate(tables) { t =>
-        val qb = (0 until planes)
-          .map(p => if (dot(qv, weights(t)(p)) > 0) 1L << p else 0L).sum
+      weights.map { w =>
+        val qb = signBucket(qv, w)
         qb +: Array.tabulate(planes)(p => qb ^ (1L << p))
       }
 
@@ -326,21 +348,10 @@ object SimilarityOps {
       * threshold is low. */
     def pairs(df: DataFrame, threshold: Double, idCol: String = "vec_id",
         vecCol: String = "embedding"): DataFrame = {
-      val prepped = normed(df, idCol, vecCol)
-      val sk = prepped.select(col(idCol), col("__v__"), col("__n__"),
+      val sk = normed(df, idCol, vecCol).select(col("*"),
         posexplode(sketch(col("__v__"))).as(Seq("__t__", "__b__")))
-      val a = sk.select(col(idCol).as("vec_a"), col("__v__").as("va"),
-        col("__n__").as("na"), col("__t__"), col("__b__"))
-      val b = sk.select(col(idCol).as("vec_b"), col("__v__").as("vb"),
-        col("__n__").as("nb"), col("__t__"), col("__b__"))
-      val cand = a.join(b, Seq("__t__", "__b__"))
-        .where(col("vec_a") < col("vec_b"))
-        .select("vec_a", "va", "na", "vec_b", "vb", "nb")
+      verifiedPairs(sk, idCol, Seq("__t__", "__b__"), threshold)
         .dropDuplicates("vec_a", "vec_b") // a pair can share several tables
-      val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x)
-      cand.withColumn("cos", round(try_divide(dot, col("na") * col("nb")), 4))
-        .where(col("cos") >= threshold)
         .select("vec_a", "vec_b", "cos")
     }
   }
@@ -404,13 +415,11 @@ object SimilarityOps {
         .withColumn("__v__", vd)
         .withColumn("__nv__",
           sqrt(aggregate(col("__v__"), lit(0.0), (acc, x) => acc + x * x)))
-      val dot = aggregate(zip_with(col("__v__"), col("__cvec__"),
-        (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-      // a zero-norm vector or centroid has no cosine: try_divide makes
-      // it null, which ranks below every cell in the argmax
+      // a zero-norm vector or centroid has no cosine: it is null, which
+      // ranks below every cell in the argmax
       val scored = prepped.crossJoin(broadcast(centroidDf(spark, cents)))
-        .withColumn("__cos__",
-          round(try_divide(dot, col("__nv__") * col("__cnorm__")), 4))
+        .withColumn("__cos__", roundedCos(col("__v__"), col("__nv__"),
+          col("__cvec__"), col("__cnorm__")))
       val carried = struct(df.columns.map(col): _*)
       scored
         .groupBy(col("__rid__"))
@@ -519,26 +528,11 @@ object SimilarityOps {
         vecCol: String = "embedding"): DataFrame = {
       // norm/cast hoisted out of the pair join: 3× fewer array passes
       val prepped = normed(df, idCol, vecCol)
-      val base = if (exact) {
-        val a = prepped.select(col(idCol).as("vec_a"), col("__v__").as("va"),
-          col("__n__").as("na"))
-        val b = prepped.select(col(idCol).as("vec_b"), col("__v__").as("vb"),
-          col("__n__").as("nb"))
-        a.join(b, col("vec_a") < col("vec_b"))
-      } else {
-        val withB = prepped.withColumn("__b__", lsh.bucket(col("__v__")))
-        val a = withB.select(col(idCol).as("vec_a"), col("__v__").as("va"),
-          col("__n__").as("na"), col("__b__"))
-        val b = withB.select(col(idCol).as("vec_b"), col("__v__").as("vb"),
-          col("__n__").as("nb"), col("__b__"))
-        a.join(b, Seq("__b__")).where(col("vec_a") < col("vec_b"))
-          .select("vec_a", "va", "na", "vec_b", "vb", "nb")
-      }
-      val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x)
-      base.withColumn("cos", round(try_divide(dot, col("na") * col("nb")), 4))
-        .where(col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cos")
+      val pairs =
+        if (exact) verifiedPairs(prepped, idCol, Nil, threshold)
+        else verifiedPairs(prepped.withColumn("__b__", lsh.bucket(col("__v__"))),
+          idCol, Seq("__b__"), threshold)
+      pairs.select("vec_a", "vec_b", "cos")
     }
   }
 
@@ -564,13 +558,11 @@ object SimilarityOps {
     val queries = prepped.where(col(idCol) < nQueries)
       .select(col(idCol).as("__qid__"), col("__v__").as("__qv__"),
         col("__n__").as("__qn__"))
-    val dot = aggregate(zip_with(col("__v__"), col("__qv__"), (x, y) => x * y),
-      lit(0.0), (a, x) => a + x)
     val byQ = Window.partitionBy(col("__qid__"))
       .orderBy(col("__cos__").desc, col(idCol))
     def topk(cand: DataFrame): DataFrame =
-      cand.withColumn("__cos__",
-          round(try_divide(dot, col("__n__") * col("__qn__")), 4))
+      cand.withColumn("__cos__", roundedCos(col("__v__"), col("__n__"),
+          col("__qv__"), col("__qn__")))
         .withColumn("__rn__", row_number().over(byQ))
         .where(col("__rn__") <= k)
         .select(col("__qid__"), col(idCol))
@@ -587,9 +579,8 @@ object SimilarityOps {
       // tiebreak) like every other cross-engine ranking here: an
       // unrounded rank boundary flips on last-ulp summation-order
       // differences between engines
-      .withColumn("__ccos__", round(try_divide(
-        aggregate(zip_with(col("__qv__"), col("__cvec__"), (x, y) => x * y),
-          lit(0.0), (a, x) => a + x), col("__qn__") * col("__cnorm__")), 4))
+      .withColumn("__ccos__", roundedCos(col("__qv__"), col("__qn__"),
+        col("__cvec__"), col("__cnorm__")))
       .withColumn("__crn__", row_number().over(
         Window.partitionBy(col("__qid__"))
           .orderBy(col("__ccos__").desc, col("__cell__").desc)))
@@ -690,19 +681,9 @@ object SimilarityOps {
       ivf.assign(df, ivf.centroids(df, idCol, vecCol), idCol, vecCol)
 
     private def pairsOf(asn: DataFrame, idCol: String,
-        vecCol: String): DataFrame = {
-      val prepped = normed(asn, idCol, vecCol, extra = Seq("cell"))
-      val a = prepped.select(col(idCol).as("vec_a"), col("cell"),
-        col("__v__").as("va"), col("__n__").as("na"))
-      val b = prepped.select(col(idCol).as("vec_b"), col("cell"),
-        col("__v__").as("vb"), col("__n__").as("nb"))
-      val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y),
-        lit(0.0), (acc, x) => acc + x)
-      a.join(b, Seq("cell")).where(col("vec_a") < col("vec_b"))
-        .withColumn("cos", round(try_divide(dot, col("na") * col("nb")), 4))
-        .where(col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cell", "cos")
-    }
+        vecCol: String): DataFrame =
+      verifiedPairs(normed(asn, idCol, vecCol, extra = Seq("cell")), idCol,
+        Seq("cell"), threshold)
 
     /** Within-cell near-dup pairs (vec_a, vec_b, cell, cos ≥ threshold). */
     def pairs(df: DataFrame, idCol: String = "vec_id",

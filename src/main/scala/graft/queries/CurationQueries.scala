@@ -105,59 +105,25 @@ object CurationQueries {
 
     // -- dedup sketches (prompt: MinHash+LSH / SimHash / Jaccard) ------------
     Query("dedup_minhash", Some(
-        """WITH toks AS (
-             SELECT doc_id, str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS w FROM documents
-           ), sh AS (
-             SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1), i -> array_to_string(w[i:i+2], ' '))) AS shingles
-             FROM toks WHERE len(w) >= 3
-           ), sigb AS (
-             SELECT doc_id, list_transform(shingles, s -> cast(('0x' || substr(md5(s), 1, 8)) AS BIGINT)) AS bh FROM sh
-           ), sig AS (
-             SELECT doc_id, [__MIXES__] AS mh FROM sigb
-           ), bands AS (
-             SELECT doc_id, mh, unnest(range(0, 4)) AS band FROM sig
-           ), bucketed AS (
-             SELECT doc_id, mh, band, md5(array_to_string(mh[band*4+1:band*4+4], ',')) AS bucket FROM bands
-           ), cand AS (
+        s"""WITH toks AS (SELECT doc_id, $wordsSql AS words FROM documents),
+           ${minhashSql("toks")}, cand AS (
              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.mh AS ma, b.mh AS mb
              FROM bucketed a JOIN bucketed b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
            )
            SELECT doc_a, doc_b,
              round(len(list_filter(range(0,16), i -> ma[i+1] = mb[i+1])) / 16.0, 4) AS est_jaccard
-           FROM cand WHERE len(list_filter(range(0,16), i -> ma[i+1] = mb[i+1])) >= 8"""
-        .replace("__MIXES__", DedupOps.minhashSalts(16).map { case (a, b) =>
-          s"list_min(list_transform(bh, h -> (h * $a + $b) % 4294967296))"
-        }.mkString(", ")))) { (s, dir) =>
+           FROM cand WHERE len(list_filter(range(0,16), i -> ma[i+1] = mb[i+1])) >= 8""")) { (s, dir) =>
       DedupOps.MinHashLSH(numHashes = 16, bands = 4, shingleSize = 3,
         threshold = 0.5).pairs(tbl(s, dir, "documents"))
     },
 
     Query("dedup_simhash", Some(
-        """WITH toks AS (
-             SELECT doc_id, unnest(str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ')) AS tok FROM documents
-           ), th AS (
-             SELECT doc_id, cast(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS h FROM toks
-           ), bits AS (
-             SELECT doc_id, b, sum(CASE WHEN (h // (1 << b)) % 2 = 1 THEN 1 ELSE -1 END) AS s
-             FROM th, (SELECT unnest(range(0, 32)) AS b) GROUP BY doc_id, b
-           )
-           SELECT doc_id, cast(sum(CASE WHEN s > 0 THEN (1 << b) ELSE 0 END) AS BIGINT) AS simhash
-           FROM bits GROUP BY doc_id""")) { (s, dir) =>
+        s"""WITH $simhashSql SELECT doc_id, simhash FROM sh""")) { (s, dir) =>
       DedupOps.SimHash(bits = 32)(tbl(s, dir, "documents"))
     },
 
     Query("simhash_pairs", Some(
-        """WITH toks AS (
-             SELECT doc_id, unnest(str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ')) AS tok FROM documents
-           ), th AS (
-             SELECT doc_id, cast(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS h FROM toks
-           ), bits AS (
-             SELECT doc_id, b, sum(CASE WHEN (h // (1 << b)) % 2 = 1 THEN 1 ELSE -1 END) AS s
-             FROM th, (SELECT unnest(range(0, 32)) AS b) GROUP BY doc_id, b
-           ), sh AS (
-             SELECT doc_id, cast(sum(CASE WHEN s > 0 THEN (1 << b) ELSE 0 END) AS BIGINT) AS simhash
-             FROM bits GROUP BY doc_id
-           )
+        s"""WITH $simhashSql
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              cast(bit_count(xor(a.simhash, b.simhash)) AS INT) AS dist
            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -166,12 +132,9 @@ object CurationQueries {
     },
 
     Query("dedup_jaccard", Some(
-        """WITH toks AS (
-             SELECT doc_id, str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS w FROM documents
-           ), sh AS (
-             SELECT doc_id, list_distinct(list_transform(range(1, len(w)-1), i -> array_to_string(w[i:i+2], ' '))) AS shingles
-             FROM toks WHERE len(w) >= 3
-           ), ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s FROM sh),
+        s"""WITH toks AS (SELECT doc_id, $wordsSql AS words FROM documents),
+           ${shinglesSql("toks")},
+           ex AS (SELECT doc_id, len(shingles) AS n, unnest(shingles) AS s FROM sh),
            inter AS (
              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, any_value(a.n) AS na, any_value(b.n) AS nb, count(*) AS i
              FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2
@@ -183,11 +146,7 @@ object CurationQueries {
     },
 
     Query("decontaminate", Some(
-        """WITH w AS (
-             SELECT doc_id,
-               string_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS ws
-             FROM documents
-           ), bench AS (
+        s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents), bench AS (
              SELECT doc_id AS bench_id, array_to_string(ws[11:18], ' ') AS probe
              FROM w WHERE doc_id % 25 = 0 AND len(ws) >= 18
            ), g AS (
@@ -252,11 +211,7 @@ object CurationQueries {
     },
 
     Query("corpus_ngrams", Some(
-        """WITH w AS (
-             SELECT doc_id,
-               string_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS ws
-             FROM documents
-           ), g AS (
+        s"""WITH w AS (SELECT doc_id, $wordsSql AS ws FROM documents), g AS (
              SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS gram
              FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)
            )
@@ -270,11 +225,8 @@ object CurationQueries {
     // closure (small pair graph), mirroring resolveDuplicates'
     // min-label fixpoint
     Query("curation_survivors", Some(
-        """WITH w0 AS (
-             SELECT doc_id, text,
-               str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS words
-             FROM documents
-           ), gated AS (
+        s"""WITH w0 AS (SELECT doc_id, text, $wordsSql AS words FROM documents),
+           gated AS (
              SELECT doc_id, text, words FROM w0
              WHERE len(words) >= 10
                AND len(list_distinct(words)) * 1.0 / len(words) >= 0.3
@@ -287,18 +239,7 @@ object CurationQueries {
              SELECT min(doc_id) AS keep_id FROM gated GROUP BY md5(text)
            ), ex AS (
              SELECT g.* FROM gated g JOIN exact ON g.doc_id = exact.keep_id
-           ), sh AS (
-             SELECT doc_id, list_distinct(list_transform(range(1, len(words)-1), i -> array_to_string(words[i:i+2], ' '))) AS shingles
-             FROM ex WHERE len(words) >= 3
-           ), sigb AS (
-             SELECT doc_id, list_transform(shingles, s -> cast(('0x' || substr(md5(s), 1, 8)) AS BIGINT)) AS bh FROM sh
-           ), sig AS (
-             SELECT doc_id, [__MIXES__] AS mh FROM sigb
-           ), bands AS (
-             SELECT doc_id, mh, unnest(range(0, 4)) AS band FROM sig
-           ), bucketed AS (
-             SELECT doc_id, mh, band, md5(array_to_string(mh[band*4+1:band*4+4], ',')) AS bucket FROM bands
-           ), prs AS (
+           ), ${minhashSql("ex")}, prs AS (
              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
              FROM bucketed a JOIN bucketed b
                ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -317,10 +258,7 @@ object CurationQueries {
            )
            SELECT e.doc_id, md5(e.text) AS text_md5 FROM ex e
            LEFT JOIN comp ON e.doc_id = comp.id
-           WHERE comp.id IS NULL OR comp.id = comp.comp"""
-        .replace("__MIXES__", DedupOps.minhashSalts(16).map { case (a, b) =>
-          s"list_min(list_transform(bh, h -> (h * $a + $b) % 4294967296))"
-        }.mkString(", ")))) { (s, dir) =>
+           WHERE comp.id IS NULL OR comp.id = comp.comp""")) { (s, dir) =>
       // the full curation chain: gate → exact dedup → LSH near-dup →
       // cluster resolution → survivor set (graft.pipeline.CurationPipeline)
       graft.pipeline.CurationPipeline.survivors(tbl(s, dir, "documents"))
@@ -339,9 +277,8 @@ object CurationQueries {
     },
 
     Query("quality_features", Some(
-        """WITH w AS (
-             SELECT doc_id, length(text) AS chars, text,
-               str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS words
+        raw"""WITH w AS (
+             SELECT doc_id, length(text) AS chars, text, $wordsSql AS words
              FROM documents)
            SELECT doc_id,
              cast(chars AS INT) AS n_chars,
@@ -355,9 +292,8 @@ object CurationQueries {
     },
 
     Query("repetition_stats", Some(
-        """WITH w AS (
-             SELECT doc_id, str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS words FROM documents
-           ), uni AS (
+        s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
+           uni AS (
              SELECT doc_id, tok, count(*) AS c
              FROM (SELECT doc_id, unnest(words) AS tok FROM w) GROUP BY 1, 2
            ), ent AS (
@@ -378,9 +314,8 @@ object CurationQueries {
     },
 
     Query("lang_id_argmax", Some(
-        """WITH w AS (
-             SELECT doc_id, str_split(regexp_replace(lower(text), '\s+', ' ', 'g'), ' ') AS words FROM documents
-           ), sc AS (
+        s"""WITH w AS (SELECT doc_id, $wordsSql AS words FROM documents),
+           sc AS (
              SELECT doc_id,
                len(list_filter(words, x -> x IN ('the', 'a', 'of', 'and', 'is'))) AS se,
                len(list_filter(words, x -> x IN ('el', 'la', 'de', 'que', 'y'))) AS ss,

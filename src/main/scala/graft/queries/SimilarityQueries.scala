@@ -10,17 +10,8 @@ import Fixtures._
 object SimilarityQueries {
   val all: Seq[Query] = Seq(
     Query("ann_topk", Some(
-        """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-           z AS (SELECT e.vec_id, unnest(e.embedding) AS x, unnest(q.qv) AS y
-                 FROM embeddings e, q WHERE e.vec_id <> 0),
-           s AS (SELECT vec_id,
-                   sum(cast(x AS DOUBLE) * cast(y AS DOUBLE)) AS dot,
-                   sqrt(sum(cast(x AS DOUBLE) * cast(x AS DOUBLE))) AS nx,
-                   sqrt(sum(cast(y AS DOUBLE) * cast(y AS DOUBLE))) AS ny
-                 FROM z GROUP BY vec_id)
-           SELECT cast(row_number() OVER (ORDER BY round(dot / (nx * ny), 4) DESC, vec_id) AS INT) AS rank,
-                  vec_id
-           FROM s ORDER BY 1 LIMIT 10""")) { (s, dir) =>
+        s"""WITH cand AS (SELECT vec_id FROM embeddings WHERE vec_id <> 0)
+           $rerankTop10Sql""")) { (s, dir) =>
       val e = tbl(s, dir, "embeddings")
       SimilarityOps.bruteForceTopK(
         e.filter(col("vec_id") =!= 0),
@@ -28,79 +19,29 @@ object SimilarityQueries {
     },
 
     Query("embed_neardup", Some(
-        """WITH z AS (
-             SELECT e.vec_id AS va, f.vec_id AS vb, unnest(e.embedding) AS x, unnest(f.embedding) AS y
+        s"""WITH cand AS (
+             SELECT e.vec_id AS va, f.vec_id AS vb
              FROM embeddings e JOIN embeddings f ON e.vec_id < f.vec_id
-           ), s AS (
-             SELECT va, vb, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY va, vb
-           )
-           SELECT va AS vec_a, vb AS vec_b, round(dot/(nx*ny), 4) AS cos
-           FROM s WHERE round(dot/(nx*ny), 4) >= 0.35""")) { (s, dir) => // exact O(n²) VERIFICATION tier (opt-in)
+           ), ${pairCosSql("pc", "cand")}
+           SELECT va AS vec_a, vb AS vec_b, cos FROM pc WHERE cos >= 0.35""")) { (s, dir) => // exact O(n²) VERIFICATION tier (opt-in)
       SimilarityOps.EmbedNearDup(threshold = 0.35, exact = true)
         .pairs(tbl(s, dir, "embeddings"))
     },
 
     Query("embed_neardup_lsh", Some(
-        """WITH planes AS (
-             SELECT p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 8)) AS p) p, (SELECT unnest(range(0, 64)) AS d) d
-           ), proj AS (
-             SELECT e.vec_id, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, planes pl GROUP BY 1, 2
-           ), sig AS (
-             SELECT vec_id, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM proj GROUP BY 1
-           ), z AS (
-             SELECT e.vec_id AS va, f.vec_id AS vb, unnest(e.embedding) AS x, unnest(f.embedding) AS y
-             FROM embeddings e JOIN sig se ON se.vec_id = e.vec_id
-                  JOIN sig sf ON true
-                  JOIN embeddings f ON f.vec_id = sf.vec_id
-             WHERE e.vec_id < f.vec_id AND se.b = sf.b
-           ), s AS (
-             SELECT va, vb, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY va, vb
-           )
-           SELECT va AS vec_a, vb AS vec_b, round(dot/(nx*ny), 4) AS cos
-           FROM s WHERE round(dot/(nx*ny), 4) >= 0.35""")) { (s, dir) =>
+        s"""WITH ${signLshSql()}, cand AS (
+             SELECT a.vec_id AS va, bb.vec_id AS vb
+             FROM sig a JOIN sig bb ON a.b = bb.b AND a.vec_id < bb.vec_id
+           ), ${pairCosSql("pc", "cand")}
+           SELECT va AS vec_a, vb AS vec_b, cos FROM pc WHERE cos >= 0.35""")) { (s, dir) =>
       SimilarityOps.EmbedNearDup(threshold = 0.35, exact = false,
         lsh = SimilarityOps.SignLsh(planes = 8, dims = 64))
         .pairs(tbl(s, dir, "embeddings"))
     },
 
     Query("ann_lsh", Some(
-        """WITH planes AS (
-             SELECT p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 8)) AS p) p, (SELECT unnest(range(0, 64)) AS d) d
-           ), proj AS (
-             SELECT e.vec_id, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, planes pl GROUP BY 1, 2
-           ), sig AS (
-             SELECT vec_id, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM proj GROUP BY 1
-           ), qb AS (SELECT b FROM sig WHERE vec_id = 0),
-           qv AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 0),
-           cand AS (
-             SELECT e.vec_id, e.embedding FROM embeddings e JOIN sig s ON s.vec_id = e.vec_id, qb
-             WHERE s.b = qb.b
-           ), z AS (
-             SELECT c.vec_id, unnest(c.embedding) AS x, unnest(qv.v) AS y FROM cand c, qv
-           ), sc AS (
-             SELECT vec_id, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY vec_id
-           )
-           SELECT cast(row_number() OVER (ORDER BY round(dot/(nx*ny), 4) DESC, vec_id) AS INT) AS rank, vec_id
-           FROM sc ORDER BY 1 LIMIT 10""")) { (s, dir) =>
+        s"""WITH ${signLshSql()}, qb AS (SELECT b FROM sig WHERE vec_id = 0),
+           cand AS (SELECT s.vec_id FROM sig s, qb WHERE s.b = qb.b)$rerankTop10Sql""")) { (s, dir) =>
       val e = tbl(s, dir, "embeddings")
       SimilarityOps.SignLsh(planes = 8, dims = 64)
         .topK(e, e.filter(col("vec_id") === 0), k = 10)
@@ -110,37 +51,14 @@ object SimilarityQueries {
     // bucket plus every Hamming-distance-1 probe bucket (the indexed
     // path's default multi-probe set is order-independent: all flips)
     Query("ann_lsh_indexed", Some(
-        """WITH planes AS (
-             SELECT p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 8)) AS p) p, (SELECT unnest(range(0, 64)) AS d) d
-           ), proj AS (
-             SELECT e.vec_id, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, planes pl GROUP BY 1, 2
-           ), sig AS (
-             SELECT vec_id, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM proj GROUP BY 1
-           ), qb AS (SELECT b FROM sig WHERE vec_id = 0),
+        s"""WITH ${signLshSql()}, qb AS (SELECT b FROM sig WHERE vec_id = 0),
            probes AS (
              SELECT qb.b AS pb FROM qb
              UNION ALL
              SELECT xor(qb.b, (1 << p.p)) FROM qb, (SELECT unnest(range(0, 8)) AS p) p
-           ),
-           qv AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 0),
-           cand AS (
-             SELECT e.vec_id, e.embedding FROM embeddings e
-             JOIN sig s ON s.vec_id = e.vec_id JOIN probes ON s.b = probes.pb
-           ), z AS (
-             SELECT c.vec_id, unnest(c.embedding) AS x, unnest(qv.v) AS y FROM cand c, qv
-           ), sc AS (
-             SELECT vec_id, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY vec_id
-           )
-           SELECT cast(row_number() OVER (ORDER BY round(dot/(nx*ny), 4) DESC, vec_id) AS INT) AS rank, vec_id
-           FROM sc ORDER BY 1 LIMIT 10""")) { (s, dir) =>
+           ), cand AS (
+             SELECT s.vec_id FROM sig s JOIN probes ON s.b = probes.pb
+           )$rerankTop10Sql""")) { (s, dir) =>
       val e = tbl(s, dir, "embeddings")
       val lsh = SimilarityOps.SignLsh(planes = 8, dims = 64)
       val io = cachedIndex(dir, "lsh_index")(lsh.writeIndex(e, _, "lsh_index"))
@@ -149,38 +67,11 @@ object SimilarityQueries {
     },
 
     Query("ann_ivf", Some(
-        """WITH cent AS (
-             SELECT vec_id AS c, embedding AS ce FROM embeddings WHERE vec_id < 16
-           ), z AS (
-             SELECT e.vec_id, cent.c, unnest(e.embedding) AS x, unnest(cent.ce) AS y
-             FROM embeddings e, cent
-           ), s AS (
-             SELECT vec_id, c, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY 1, 2
-           ), ranked AS (
-             SELECT vec_id, c, row_number() OVER (
-               PARTITION BY vec_id
-               ORDER BY round(dot/(nx*ny), 4) DESC, c DESC) AS rn
-             FROM s
-           ), asn AS (SELECT vec_id, c AS cell FROM ranked WHERE rn = 1),
+        s"""WITH $ivfAssignSql,
            qcells AS (SELECT c AS cell FROM ranked WHERE vec_id = 0 AND rn <= 4),
-           qv AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 0),
            cand AS (
-             SELECT e.vec_id, e.embedding FROM embeddings e
-             JOIN asn a ON a.vec_id = e.vec_id JOIN qcells q ON a.cell = q.cell
-           ), z2 AS (
-             SELECT cnd.vec_id, unnest(cnd.embedding) AS x, unnest(qv.v) AS y
-             FROM cand cnd, qv
-           ), sc AS (
-             SELECT vec_id, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z2 GROUP BY 1
-           )
-           SELECT cast(row_number() OVER (ORDER BY round(dot/(nx*ny), 4) DESC, vec_id) AS INT) AS rank, vec_id
-           FROM sc ORDER BY 1 LIMIT 10""")) { (s, dir) =>
+             SELECT a.vec_id FROM asn a JOIN qcells q ON a.cell = q.cell
+           )$rerankTop10Sql""")) { (s, dir) =>
       val e = tbl(s, dir, "embeddings")
       SimilarityOps.IvfIndex(nlist = 16, nprobe = 4)
         .topK(e, e.filter(col("vec_id") === 0), k = 10)
@@ -190,20 +81,7 @@ object SimilarityQueries {
     // share a bucket with the query in ANY table, each table probed
     // at Hamming radius 1; candidate ids dedupe before the rerank
     Query("ann_lsh_banded", Some(
-        """WITH planes AS (
-             SELECT t.t, p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(t.t || ':' || p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 16)) AS t) t,
-                  (SELECT unnest(range(0, 8)) AS p) p,
-                  (SELECT unnest(range(0, 64)) AS d) d
-           ), proj AS (
-             SELECT e.vec_id, pl.t, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, planes pl GROUP BY 1, 2, 3
-           ), sig AS (
-             SELECT vec_id, t, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM proj GROUP BY 1, 2
-           ), qsig AS (SELECT t, b FROM sig WHERE vec_id = 0),
+        s"""WITH ${bandedSignLshSql()}, qsig AS (SELECT t, b FROM sig WHERE vec_id = 0),
            probes AS (
              SELECT t, b AS pb FROM qsig
              UNION ALL
@@ -212,19 +90,7 @@ object SimilarityQueries {
            ), cand AS (
              SELECT DISTINCT se.vec_id
              FROM sig se JOIN probes pr ON pr.t = se.t AND pr.pb = se.b
-           ),
-           qv AS (SELECT embedding AS v FROM embeddings WHERE vec_id = 0),
-           z AS (
-             SELECT c.vec_id, unnest(e.embedding) AS x, unnest(qv.v) AS y
-             FROM cand c JOIN embeddings e ON e.vec_id = c.vec_id, qv
-           ), sc AS (
-             SELECT vec_id, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY vec_id
-           )
-           SELECT cast(row_number() OVER (ORDER BY round(dot/(nx*ny), 4) DESC, vec_id) AS INT) AS rank, vec_id
-           FROM sc ORDER BY 1 LIMIT 10""")) { (s, dir) =>
+           )$rerankTop10Sql""")) { (s, dir) =>
       // the PRODUCTION hyperplane serving path: banded multi-table
       // sign-LSH (16 tables × 8 planes, Hamming-1 probes per table)
       // over a materialized partitionBy(t, bucket) index — measured
@@ -243,42 +109,16 @@ object SimilarityQueries {
     // recall = |approx ∩ exact| / 10; the IVF nprobe cutoff also
     // ranks by rounded centroid cosine (engine-portable boundary)
     Query("ann_recall", Some(
-        """WITH cent AS (
-             SELECT vec_id AS c, embedding AS ce FROM embeddings WHERE vec_id < 16
-           ), zc AS (
-             SELECT e.vec_id, cent.c, unnest(e.embedding) AS x, unnest(cent.ce) AS y
-             FROM embeddings e, cent
-           ), sc AS (
-             SELECT vec_id, c, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM zc GROUP BY 1, 2
-           ), rankedc AS (
-             SELECT vec_id, c, row_number() OVER (
-               PARTITION BY vec_id
-               ORDER BY round(dot/(nx*ny), 4) DESC, c DESC) AS rn
-             FROM sc
-           ), asn AS (SELECT vec_id, c AS cell FROM rankedc WHERE rn = 1),
-           rankedq AS (
-             SELECT vec_id, c, row_number() OVER (
-               PARTITION BY vec_id
-               ORDER BY round(dot/(nx*ny), 4) DESC, c DESC) AS rn
-             FROM sc
-           ), qcells AS (
-             SELECT vec_id AS qid, c AS cell FROM rankedq
+        s"""WITH $ivfAssignSql, qcells AS (
+             SELECT vec_id AS qid, c AS cell FROM ranked
              WHERE vec_id < 20 AND rn <= 4
            ), zq AS (
              SELECT q.vec_id AS qid, e.vec_id,
-               unnest(q.embedding) AS qx, unnest(e.embedding) AS ex
+               unnest(q.embedding) AS x, unnest(e.embedding) AS y
              FROM embeddings q, embeddings e
              WHERE q.vec_id < 20 AND e.vec_id <> q.vec_id
-           ), sq AS (
-             SELECT qid, vec_id, sum(cast(qx AS DOUBLE)*cast(ex AS DOUBLE)) AS dot,
-               sqrt(sum(cast(qx AS DOUBLE)*cast(qx AS DOUBLE))) AS nq,
-               sqrt(sum(cast(ex AS DOUBLE)*cast(ex AS DOUBLE))) AS ne
-             FROM zq GROUP BY 1, 2
            ), cosq AS (
-             SELECT qid, vec_id, round(dot/(nq*ne), 4) AS cos FROM sq
+             SELECT qid, vec_id, $roundedCosSql AS cos FROM zq GROUP BY 1, 2
            ), exact_top AS (
              SELECT qid, vec_id FROM (
                SELECT qid, vec_id, row_number() OVER (
@@ -291,20 +131,8 @@ object SimilarityQueries {
                FROM cosq cq JOIN asn a ON a.vec_id = cq.vec_id
                     JOIN qcells qc ON qc.qid = cq.qid AND qc.cell = a.cell)
              WHERE rn <= 10
-           ), planes AS (
-             SELECT t.t, p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(t.t || ':' || p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 16)) AS t) t,
-                  (SELECT unnest(range(0, 8)) AS p) p,
-                  (SELECT unnest(range(0, 64)) AS d) d
-           ), proj AS (
-             SELECT e.vec_id, pl.t, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, planes pl GROUP BY 1, 2, 3
-           ), sig AS (
-             SELECT vec_id, t, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM proj GROUP BY 1, 2
-           ), qsig AS (SELECT vec_id AS qid, t, b FROM sig WHERE vec_id < 20),
+           ), ${bandedSignLshSql()},
+           qsig AS (SELECT vec_id AS qid, t, b FROM sig WHERE vec_id < 20),
            probes AS (
              SELECT qid, t, b AS pb FROM qsig
              UNION ALL
@@ -349,44 +177,15 @@ object SimilarityQueries {
     // count ratio; the single-table sig is md5(p:d), the banded sig
     // md5(t:p:d) — the same derivations as their serving oracles
     Query("neardup_recall", Some(
-        """WITH allz AS (
-             SELECT e.vec_id AS va, f.vec_id AS vb, unnest(e.embedding) AS x, unnest(f.embedding) AS y
+        s"""WITH allp AS (
+             SELECT e.vec_id AS va, f.vec_id AS vb
              FROM embeddings e JOIN embeddings f ON e.vec_id < f.vec_id
-           ), alls AS (
-             SELECT va, vb, round(sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) /
-               (sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) *
-                sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE)))), 4) AS cos
-             FROM allz GROUP BY va, vb
-           ), exact_p AS (SELECT va, vb FROM alls WHERE cos >= 0.35),
-           splanes AS (
-             SELECT p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 8)) AS p) p, (SELECT unnest(range(0, 64)) AS d) d
-           ), sproj AS (
-             SELECT e.vec_id, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, splanes pl GROUP BY 1, 2
-           ), ssig AS (
-             SELECT vec_id, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM sproj GROUP BY 1
-           ), scand AS (
+           ), ${pairCosSql("alls", "allp")},
+           exact_p AS (SELECT va, vb FROM alls WHERE cos >= 0.35),
+           ${signLshSql("s")}, scand AS (
              SELECT a.vec_id AS va, bb.vec_id AS vb
              FROM ssig a JOIN ssig bb ON a.b = bb.b AND a.vec_id < bb.vec_id
-           ),
-           bplanes AS (
-             SELECT t.t, p.p, d.d,
-               CASE WHEN cast(('0x' || substr(md5(t.t || ':' || p.p || ':' || d.d), 1, 1)) AS BIGINT) % 2 = 1
-                    THEN 1.0 ELSE -1.0 END AS w
-             FROM (SELECT unnest(range(0, 16)) AS t) t,
-                  (SELECT unnest(range(0, 8)) AS p) p,
-                  (SELECT unnest(range(0, 64)) AS d) d
-           ), bproj AS (
-             SELECT e.vec_id, pl.t, pl.p, sum(cast(e.embedding[pl.d+1] AS DOUBLE) * pl.w) AS s
-             FROM embeddings e, bplanes pl GROUP BY 1, 2, 3
-           ), bsig AS (
-             SELECT vec_id, t, cast(sum(CASE WHEN s > 0 THEN (1 << p) ELSE 0 END) AS BIGINT) AS b
-             FROM bproj GROUP BY 1, 2
-           ), bcand AS (
+           ), ${bandedSignLshSql("b")}, bcand AS (
              SELECT DISTINCT a.vec_id AS va, bb.vec_id AS vb
              FROM bsig a JOIN bsig bb ON a.t = bb.t AND a.b = bb.b AND a.vec_id < bb.vec_id
            ), counts AS (
@@ -418,37 +217,11 @@ object SimilarityQueries {
     // vector drops
     // when a smaller-id vector in its cell has rounded cos >= 0.35
     Query("semdedup", Some(
-        """WITH cent AS (
-             SELECT vec_id AS c, embedding AS ce FROM embeddings WHERE vec_id < 16
-           ), z AS (
-             SELECT e.vec_id, cent.c, unnest(e.embedding) AS x, unnest(cent.ce) AS y
-             FROM embeddings e, cent
-           ), s AS (
-             SELECT vec_id, c, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM z GROUP BY 1, 2
-           ), ranked AS (
-             SELECT vec_id, c, row_number() OVER (
-               PARTITION BY vec_id
-               ORDER BY round(dot/(nx*ny), 4) DESC, c DESC) AS rn
-             FROM s
-           ), asn AS (SELECT vec_id, c AS cell FROM ranked WHERE rn = 1),
-           zz AS (
-             SELECT a.vec_id AS va, b.vec_id AS vb,
-               unnest(a.embedding) AS x, unnest(b.embedding) AS y
-             FROM embeddings a JOIN asn aa ON aa.vec_id = a.vec_id
-                  JOIN asn bb ON aa.cell = bb.cell
-                  JOIN embeddings b ON b.vec_id = bb.vec_id
-             WHERE a.vec_id < b.vec_id
-           ), ss AS (
-             SELECT va, vb, sum(cast(x AS DOUBLE)*cast(y AS DOUBLE)) AS dot,
-               sqrt(sum(cast(x AS DOUBLE)*cast(x AS DOUBLE))) AS nx,
-               sqrt(sum(cast(y AS DOUBLE)*cast(y AS DOUBLE))) AS ny
-             FROM zz GROUP BY 1, 2
-           ), drops AS (
-             SELECT DISTINCT vb FROM ss WHERE round(dot/(nx*ny), 4) >= 0.35
-           )
+        s"""WITH $ivfAssignSql, cand AS (
+             SELECT a.vec_id AS va, b.vec_id AS vb
+             FROM asn a JOIN asn b ON a.cell = b.cell AND a.vec_id < b.vec_id
+           ), ${pairCosSql("pc", "cand")},
+           drops AS (SELECT DISTINCT vb FROM pc WHERE cos >= 0.35)
            SELECT asn.vec_id AS vec_id, cast(asn.cell AS INT) AS cell
            FROM asn WHERE asn.vec_id NOT IN (SELECT vb FROM drops)""")) { (s, dir) =>
       // cluster-then-threshold semantic dedup: survivors with their cell

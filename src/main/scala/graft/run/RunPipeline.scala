@@ -1,7 +1,6 @@
 package graft.run
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.config.PipelineConfig
 import graft.pipeline.TranscriptPipeline
 import graft.sink.TableIO
@@ -37,13 +36,10 @@ object RunPipeline {
       .map(p => PipelineConfig.parse(Files.readString(Paths.get(p))))
       .getOrElse(TranscriptPipeline.spec)
 
-    val builder = SparkSession.builder()
-      .appName(s"graft-pipeline-$runId")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    // the shared settings; default shuffle partitions and the UI stay on.
     // spark-submit provides the master; fall back to local[N] when run
     // directly (sbt runMain)
+    val builder = graft.GraftSession.shared.appName(s"graft-pipeline-$runId")
     val spark = (if (sys.props.contains("spark.master")) builder
       else builder.master("local[" +
         sys.env.getOrElse("SPARK_GRAFT_CPUS",

@@ -463,6 +463,33 @@ class DatasetOpsSpec extends AnyFunSuite {
       .count() == 0)
   }
 
+  test("sign-bit twins: the Catalyst bucket and sketch equal the " +
+    "driver-side probe lists' own buckets, degenerate vectors included") {
+    val lsh = SimilarityOps.SignLsh(planes = 8, dims = 64)
+    val banded = SimilarityOps.BandedSignLsh(tables = 16, planes = 8, dims = 64)
+    val rnd = new scala.util.Random(11)
+    val vecs: Seq[Array[Double]] =
+      Seq(Array.fill(64)(0.0), Array.fill(64)(-0.0), Array.empty[Double],
+        Array.fill(64)(-1.0), Array.fill(64)(-1e300),
+        Array.tabulate(64)(d => if (d % 2 == 0) 1e300 else -1e300),
+        Array.fill(64)(Float.MaxValue.toDouble)) ++
+      // ragged: elements past either end count as 0 on both sides
+      Seq(1, 7, 63, 65, 128).map(n => Array.fill(n)(rnd.nextGaussian())) ++
+      (1 to 300).map(_ => Array.fill(64)(
+        rnd.nextGaussian() * math.pow(10, rnd.nextInt(13) - 6)))
+    val got = vecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
+      .toDF("i", "v")
+      .select(col("i"), lsh.bucket(col("v")), banded.sketch(col("v")))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2)))
+    assert(got.length == vecs.size)
+    got.foreach { case (i, bucket, sketch) =>
+      assert(bucket == lsh.probeBuckets(vecs(i), 0).head, s"vector $i")
+      val probes = banded.probeBuckets(vecs(i))
+      (0 until banded.tables).foreach(t =>
+        assert(sketch(t) == probes(t)(0), s"vector $i, table $t"))
+    }
+  }
+
   test("fast hash tier: same dup/non-dup pair decisions as the portable md5 tier") {
     // exact dups + clearly-disjoint docs: both hash families must agree
     // on the PAIR SET (estimates may differ on borderline docs, so the
